@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types
 
+from social_and_media_data_ingestion_spark.session import pin
+
 # 32-bit-safe universal-hash parameters (P is a Mersenne prime 2^31-1).
 _P = 2147483647
 _HASH_AB = [
@@ -312,7 +314,7 @@ def minhash_lsh_candidates(
         banded.groupBy("band", "bucket")
         .agg(ids.alias("ids"))
         .filter(F.size("ids") > 1)
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     small = (
         grouped.filter(F.size("ids") <= max_bucket)
         .select(F.explode(pairs).alias("p"))
@@ -419,7 +421,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 30,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, cluster_id) for every node in `edges`, cluster_id = min node id
     of its connected component — the clustering stage of near-dup dedup
@@ -447,26 +448,15 @@ def connected_components(
     segments; the build side is the label frame — node-scale, the
     smaller side by construction (|V| vs |2E + V|).
 
-    Checkpointing: by default rounds truncate lineage via localCheckpoint
-    (executor-stored blocks, no FS round-trip — right for local / interactive
-    runs). On a large cluster an executor loss would destroy a
-    localCheckpoint block with NO lineage left to recompute it, failing
-    the job mid-iteration; pass checkpoint_dir (an HDFS/object-store
-    path) to use reliable `DataFrame.checkpoint` instead, which survives
-    executor death. Passing it sets the SESSION-GLOBAL checkpoint dir
-    (explicit caller intent wins over ambient config); checkpoint files
-    persist after the run unless
-    `spark.cleaner.referenceTracking.cleanCheckpoints=true` (see
-    `pagerank` for the full caveat).
-    """
-    spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    Lineage: the doubled edge set, the initial labels and every round's
+    labels are eager :func:`session.pin` pins, so the checkpoint medium
+    follows the deployment.
 
-    def _truncate(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+    Edges with a NULL `src` or `dst` are dropped at entry: a NULL
+    endpoint names no node, so it joins no component and never appears
+    as an `id`.
+    """
+    edges = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
 
     # materialize the doubled edge set ONCE: it is joined every round,
     # and the caller's edge lineage (LSH candidates -> Jaccard verify ->
@@ -500,15 +490,17 @@ def connected_components(
     # two union branches), as pre-r14 — deriving nodes/self-loops from
     # an UNPINNED doubled frame re-executed it four times (measured 2x
     # wall-clock on corpus_full_curation before this pin was hoisted)
-    doubled = _truncate(
+    doubled = pin(
         edges.select(_id(src).alias("s"), _id(dst).alias("t"))
         .union(edges.select(_id(dst).alias("s"), _id(src).alias("t")))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
-    labels = _truncate(
+    labels = pin(
         doubled.select("s")
         .distinct()
-        .select(F.col("s").alias("id"), F.col("s").alias("label"))
+        .select(F.col("s").alias("id"), F.col("s").alias("label")),
+        eager=True,
     )
     # self-loops: each node's own label reaches the neighbor-min
     # aggregate through the same join — no separate labels left-join.
@@ -523,7 +515,7 @@ def connected_components(
     )
     converged = False
     for _ in range(max_iter):
-        stepped = _truncate(
+        stepped = pin(
             bi.join(
                 labels.hint("shuffle_hash").select(
                     F.col("id").alias("t"), F.col("label").alias("t_label")
@@ -538,7 +530,8 @@ def connected_components(
                 F.min(
                     F.when(F.col("t") == F.col("s"), F.col("t_label"))
                 ).alias("__old"),
-            )
+            ),
+            eager=True,
         )
         # map-only filter over the pinned blocks (no join, no shuffle)
         done = stepped.filter(F.col("label") != F.col("__old")).isEmpty()
@@ -708,14 +701,13 @@ def containment_pairs(
     collect_list'ed — so every buffered posting list is <= max_df
     elements by construction and no unbounded list ever materializes.
     The i<j pair explosion replaces the self-join's second
-    shuffle-plus-probe of the full index. The pruned index is
-    localCheckpoint-pinned because both the pair generator and the size
-    denominators read it. `max_df=None` keeps the join formulation
+    shuffle-plus-probe of the full index. The pruned index is pinned
+    because both the pair generator and the size denominators read it. `max_df=None` keeps the join formulation
     (unbounded posting lists must not be collected) — exact semantics
     on trusted-small corpora only."""
     sh = word_shingles(df, id_col, text_col, n)
     if max_df is not None:
-        postings = _pruned_postings(sh, max_df).localCheckpoint(eager=False)
+        postings = _pruned_postings(sh, max_df).transform(pin)
         sh = postings.select(F.explode("ids").alias("id"), "shingle")
         # i<j combinations generated inside ONE whole-stage-codegen
         # expression over the SORTED list (so id_a < id_b holds by

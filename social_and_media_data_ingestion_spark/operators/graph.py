@@ -4,16 +4,18 @@ Connected components lives in operators/dedup.py (it grew out of the
 near-dup clustering path); this module holds the general-purpose
 algorithms. Everything is expressed as joins + partial-combinable
 aggregates per iteration — the plan shape that scales: one shuffle per
-iteration keyed on the node id, lineage kept flat by periodic
-localCheckpoint truncation (the same trade documented for connected
-components in operators/dedup.py) so long runs don't grow an unbounded
-Catalyst tree.
+iteration keyed on the node id, lineage kept flat by periodic pins
+(session.pin, the same trade as connected components in
+operators/dedup.py) so long runs don't grow an unbounded Catalyst
+tree.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from social_and_media_data_ingestion_spark.session import pin
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -30,7 +32,6 @@ def pagerank(
     round_dp: int = 10,
     checkpoint_every: int = 1,
     redistribute_dangling: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(node, pr) after `iters` synchronous PageRank rounds from a
     uniform start: pr = (1-d)/N + d * (sum_in(pr_src / outdeg_src) + D)
@@ -58,8 +59,8 @@ def pagerank(
     iteration count are plan literals — no driver-side data collect.
 
     Lineage: every `checkpoint_every` rounds the rank frame (N rows —
-    small next to the edges) is localCheckpoint-ed, truncating the plan
-    so 20+-iteration runs keep a bounded Catalyst tree instead of an
+    small next to the edges) is pinned, truncating the plan so
+    20+-iteration runs keep a bounded Catalyst tree instead of an
     iters-deep unrolled join stack (0 disables truncation). The default
     is EVERY round — the GraphX-Pregel cadence: the rank frame must
     shuffle each round anyway, the pin costs one comparable write, and
@@ -67,30 +68,9 @@ def pagerank(
     contribution join (measured 2x: 16.6 s -> 8.7 s for 12 rounds at
     sf0.1 vs checkpointing every 5).
 
-    Checkpointing medium (same contract as connected_components):
-    by default pins use localCheckpoint — executor-stored blocks with
-    NO lineage, so on a cluster one executor loss mid-run fails the job
-    unrecoverably. Pass checkpoint_dir (an HDFS/object-store path) to
-    use reliable `DataFrame.checkpoint` for every pin instead, which
-    survives executor death at the cost of a FS round-trip per pin.
-    Two operational caveats with reliable checkpoints (they apply to
-    every Spark job, not just this operator): `setCheckpointDir` is
-    SESSION-GLOBAL, so passing `checkpoint_dir` redirects any ambient
-    configuration for the rest of the session (explicit caller intent
-    wins); and Spark does NOT delete checkpoint files when the frame is
-    dereferenced unless
-    `spark.cleaner.referenceTracking.cleanCheckpoints=true` — a
-    20-iteration run otherwise leaves ~20 rank-frame snapshots (N-row
-    scale, small) in the store for the caller/cluster GC to reap.
+    Every pin is an eager :func:`session.pin`, so the checkpoint
+    medium follows the deployment.
     """
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _pin(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
     # e / deg / nodes are joined EVERY round: pin them eagerly once.
     # A lazy plan re-derives a shared subtree per consumer path (RDDs
     # recompute diamond parents unless persisted), so an unpinned edge
@@ -99,14 +79,18 @@ def pagerank(
     # iterations at sf0.1, ~3 s pinned. Same fix as triangle_count /
     # connected_components; the pinned frames are edge- and node-scale,
     # small next to the corpus that built them.
-    e = _pin(edges.select(F.col("src").alias("s"), F.col("dst").alias("t")))
-    nodes = _pin(
+    e = pin(
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("t")), eager=True
+    )
+    nodes = pin(
         e.select(F.col("s").alias("node"))
         .unionAll(e.select(F.col("t").alias("node")))
-        .distinct()
+        .distinct(),
+        eager=True,
     )
-    deg = _pin(
-        e.groupBy(F.col("s").alias("d_node")).agg(F.count("*").alias("deg"))
+    deg = pin(
+        e.groupBy(F.col("s").alias("d_node")).agg(F.count("*").alias("deg")),
+        eager=True,
     )
     n_nodes = nodes.count()  # scalar: one number to the driver, like a codebook
     if n_nodes == 0:
@@ -143,7 +127,7 @@ def pagerank(
             F.round(F.lit(teleport) + F.lit(damping) * gain, round_dp).alias("pr"),
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
-            pr = _pin(pr)
+            pr = pin(pr, eager=True)
     return pr.select(F.col("p_node").alias("node"), "pr")
 
 
@@ -164,7 +148,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # the canonical edge set feeds THREE consumers (degrees, wedge join,
     # closing probe) across two actions — pin it so the caller's
     # (possibly expensive) edge derivation runs once. LAZY pin
-    # (round-10 adjudication): a lazy localCheckpoint persists at first
+    # (round-10 adjudication): a lazy pin persists at first
     # materialization, so the second action still reads pinned blocks —
     # the old eager=True bought nothing but a job at plan-construction
     # time. The accepted trade: the first action's three consumers can
@@ -178,7 +162,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     deg = (
         e.select(F.col("a").alias("n"))
@@ -241,11 +225,11 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     fixpoint with the identical per-round cost.
 
     Scale spelling: one degree hash-agg + two semi-joins per round on an
-    edge set that only SHRINKS; each round's survivor frame is
-    localCheckpoint-materialized so round r+1 reads pinned blocks
-    instead of replaying rounds 1..r (the same lineage-truncation trade
-    as connected components in operators/dedup.py). The per-round
-    (n_nodes, n_edges) counts are bounded driver scalars.
+    edge set that only SHRINKS; each round's survivor frame is pinned
+    so round r+1 reads materialized blocks instead of replaying rounds
+    1..r (the same lineage-truncation trade as connected components in
+    operators/dedup.py). The per-round (n_nodes, n_edges) counts are
+    bounded driver scalars.
     """
     e = (
         edges.select(
@@ -254,7 +238,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     stats: list[tuple[int, int, int]] = []
     for r in range(1, rounds + 1):
@@ -269,7 +253,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
             e.join(keep.select(F.col("n").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("n").alias("b")), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         stats.append((r, keep.count(), e.count()))
     spark = edges.sparkSession

@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from social_and_media_data_ingestion_spark.session import pin
+
 SALT_COL = "__salt"
 
 
@@ -164,14 +166,11 @@ def _global_rank(
     Determinism: RangePartitioner's sampled boundaries are NOT stable
     across the two jobs (AQE can re-plan the upstream stage between runs,
     changing sample seeds), so the ranged frame is materialized ONCE via
-    localCheckpoint — both the count job and the rank job read the same
-    blocks. This also means the expensive upstream plan executes once,
-    not twice. The checkpoint is LAZY (eager=False): the count job —
-    the first action — materializes the blocks as it counts. `order_by`
-    must be a total order for deterministic output. (On a cluster where
-    executor loss matters, swap localCheckpoint for a reliable
-    checkpoint dir — the same trade documented for connected components
-    in operators/dedup.py.)
+    a pin (:func:`session.pin`) — both the count job and the rank job
+    read the same blocks. This also means the expensive upstream plan
+    executes once, not twice. The pin is LAZY: the count job — the first
+    action — materializes the blocks as it counts. `order_by` must be a
+    total order for deterministic output.
     Returns (df with `out_col`, total row count).
     """
     from pyspark.sql import types as T
@@ -240,8 +239,8 @@ def _ranged_sorted_pin(
     df: DataFrame, cols: Sequence[Column], n_parts: int | None, pid: str
 ) -> DataFrame:
     """Range-partition on the sort key, SORT WITHIN each partition, tag
-    the partition id, and pin via lazy localCheckpoint. Shared by the
-    prefix-pass primitives below (r13 opt round): with the sort done
+    the partition id, and pin it lazily. Shared by the prefix-pass
+    primitives below (r13 opt round): with the sort done
     BEFORE the pin, the second job can compute per-partition prefixes
     with a map-only pass over the pinned blocks — the old spelling left
     the sort to a Window.partitionBy(pid), and because a checkpointed
@@ -269,7 +268,7 @@ def _ranged_sorted_pin(
     return (
         ranged.sortWithinPartitions(*cols)
         .withColumn(pid, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
 
 
@@ -461,10 +460,10 @@ def global_running_sum(
     output (with ties the intra-tie prefixes depend on tie order, as
     with any ROWS frame).
 
-    The ranged frame is localCheckpoint-materialized (lazily — the
-    totals job materializes as it aggregates, see :func:`_global_rank`)
-    so the totals job and the prefix-sum job see the SAME partitioning
-    (range boundaries are sampled and not replay-stable).
+    The ranged frame is pinned (lazily — the totals job materializes
+    as it aggregates, see :func:`_global_rank`) so the totals job and
+    the prefix-sum job see the SAME partitioning (range boundaries are
+    sampled and not replay-stable).
 
     With `return_total=True` returns `(df, total)` where `total` is the
     exact grand total of `value_col` (a native Python int / Decimal /
@@ -558,9 +557,9 @@ def global_running_min(
     offset could in principle widen fractional decimals through
     least(min, lit) unification — no in-repo caller hit that).
 
-    The ranged frame is localCheckpoint-materialized (lazily) so the
-    minima job and the prefix job see the SAME sampled range boundaries
-    (see :func:`_global_rank` for why)."""
+    The ranged frame is pinned (lazily) so the minima job and the
+    prefix job see the SAME sampled range boundaries (see
+    :func:`_global_rank` for why)."""
     from pyspark.sql import types as T
 
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
@@ -577,9 +576,7 @@ def global_running_min(
     for row in minima:
         if acc is not None:
             offsets[row[pid]] = acc
-        m = row["m"]
-        if m is not None and (acc is None or m < acc):
-            acc = m
+        acc = _min2(acc, row["m"])
     in_dt = df.schema[value_col].dataType
     base_fields = [f for f in ranged.schema.fields if f.name != pid]
     out_schema = T.StructType(base_fields + [T.StructField(out_col, in_dt)])

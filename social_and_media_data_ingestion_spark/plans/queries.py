@@ -34,6 +34,7 @@ from social_and_media_data_ingestion_spark.plans.tables import (
     t,
     vectors,
 )
+from social_and_media_data_ingestion_spark.session import pin
 
 
 @dataclass(frozen=True)
@@ -2114,8 +2115,8 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 1-row sketch frame feeds TWO consumers (the rank pass and the final
 # assembly) and exchange reuse does not deduplicate the aggregate
 # subtree (3 lineitem scans and a doubled countDistinct shuffle
-# measured unpinned — round-8 ADVICE), so it is pinned with a lazy
-# localCheckpoint: one job computes it at first action, both consumers
+# measured unpinned — round-8 ADVICE), so it is pinned lazily
+# (session.pin): one job computes it at first action, both consumers
 # read the persisted 1-row block, and the two-scan claim above is the
 # plan that actually executes.
 # Empty input: every check degenerates to TRUE on both engines.
@@ -2148,7 +2149,7 @@ def agg_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "percentile_approx(price, array(0.25D, 0.5D, 0.75D))"
         ).alias("ap"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     ranks = li.crossJoin(F.broadcast(sketch.select("ap"))).agg(
         *[
             c

@@ -29,6 +29,7 @@ from social_and_media_data_ingestion_spark.plans.tables import (
     t,
     vectors,
 )
+from social_and_media_data_ingestion_spark.session import pin
 
 
 # =============================================================================
@@ -1204,7 +1205,7 @@ def events_gap_filled_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.groupBy(F.to_date("ts").alias("day"), "event_type")
         .agg(F.count("*").cast("long").alias("n_events"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     days = bounds.select(
@@ -1494,7 +1495,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = (
         tok.groupBy("source", "term", "doc_id")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tf = g.groupBy("source", "term").agg(F.sum("cnt").cast("long").alias("tf"))
     dfq = g.groupBy("term").agg(F.count("*").cast("long").alias("df"))

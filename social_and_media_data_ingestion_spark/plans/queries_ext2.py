@@ -33,6 +33,7 @@ from social_and_media_data_ingestion_spark.plans.tables import (
     t,
     vectors,
 )
+from social_and_media_data_ingestion_spark.session import pin
 
 
 # =============================================================================
@@ -510,7 +511,7 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     gb = (
         bg.groupBy("doc_id", "bigram")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     bc = gb.groupBy("bigram").agg(F.sum("cnt").alias("c_bg"))
     fc = (
@@ -1343,7 +1344,7 @@ def orders_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         tagged.repartitionByRange(_default_partitions(spark), *sort_cols)
         .sortWithinPartitions(*sort_cols)
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     counts = ranged.groupBy("__pid", "__tag").count().collect()
     # per-(pid, tag) global-rank offsets and the per-tag row count n —
@@ -3332,7 +3333,7 @@ def graph_pagerank_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # =============================================================================
 # PageRank, LONG-RUN variant — 12 synchronous rounds with the rank frame
-# localCheckpoint-ed EVERY round (GraphX-Pregel cadence; see the operator
+# pinned EVERY round (GraphX-Pregel cadence; see the operator
 # docstring for the measured 2x): truncated lineage keeps the Catalyst
 # tree bounded, and the per-round stats let AQE broadcast the rank side.
 # Same trading graph and per-round arithmetic as graph_pagerank_purchases;

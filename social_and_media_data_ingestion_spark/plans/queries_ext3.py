@@ -24,6 +24,7 @@ from social_and_media_data_ingestion_spark.plans.tables import (
     t,
     vectors,
 )
+from social_and_media_data_ingestion_spark.session import pin
 
 
 def _purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -701,7 +702,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("kg.kind").alias("kind"), F.col("kg.g").alias("g"))
         .groupBy("kind", "g")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     bi = gc.filter(F.col("kind") == "b").select(F.col("g").alias("b"), "c")
     tot = gc.agg(

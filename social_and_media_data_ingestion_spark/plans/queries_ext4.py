@@ -50,6 +50,7 @@ from social_and_media_data_ingestion_spark.plans.tables import (
     t,
     vectors,
 )
+from social_and_media_data_ingestion_spark.session import pin
 
 
 def _r(col, dp: int):
@@ -867,7 +868,7 @@ def text_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged, so the ranks are exactly the standalone ranks.
     scored = _bm25_multi_df(
         spark, sf_dir, {"a": _RRF_TERMS_A, "b": _RRF_TERMS_B}
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
 
     def ranked(name, out):
         # r13 opt round: the rank used to be an UNPARTITIONED window —
@@ -1303,7 +1304,7 @@ def events_chi2_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofweek("ts").cast("bigint").alias("dow"))
         .agg(F.count("*").alias("o"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rt = obs.groupBy("event_type").agg(F.sum("o").alias("r"))
     ct = obs.groupBy("dow").agg(F.sum("o").alias("c"))

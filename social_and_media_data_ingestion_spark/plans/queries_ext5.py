@@ -69,6 +69,7 @@ from social_and_media_data_ingestion_spark.plans.tables import (
     t,
     vectors,
 )
+from social_and_media_data_ingestion_spark.session import pin
 
 # anchor date for integer day indices (differences are what matter; the
 # anchor just has to precede any data)
@@ -460,7 +461,7 @@ def ml_naive_bayes_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     test = (
         docs.filter(F.expr("doc_id div 20") % 2 == 1)
         .withColumnRenamed("source", "actual")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tr_tok = train.select("source", F.explode("toks").alias("token"))
     # Tokenize the TRAIN corpus exactly once: the (class, token) count
@@ -473,7 +474,7 @@ def ml_naive_bayes_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = (
         tr_tok.groupBy("source", "token")
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     totals = model.groupBy("source").agg(F.sum("cnt").alias("tot"))
     vocab = model.select("token").distinct().agg(F.count("*").alias("v"))
@@ -487,7 +488,7 @@ def ml_naive_bayes_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     priors = (
         train.groupBy("source")
         .agg(F.count("*").alias("nd"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ndocs = priors.agg(F.sum("nd").alias("n"))
     def _lpi(ratio):
@@ -1277,7 +1278,7 @@ def er_resolution_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("name1", "name2", 4) >= 0)
         .select("name1", "name2")
         .distinct()
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     from social_and_media_data_ingestion_spark.operators.dedup import (
         connected_components,
     )
@@ -1750,7 +1751,7 @@ def ml_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         binned.groupBy("event_type", "half", "bin")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     et = cells.select("event_type").distinct()
     bins = F.broadcast(
@@ -1966,7 +1967,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.filter(F.col("t").isNotNull())
         .groupBy("s", "t")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     ws = Window.partitionBy("s")
     p = cnt.select(
@@ -2006,7 +2007,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Graph traversal — 3-hop BFS reachability from seed suppliers over the
 # bounded k-NN partner graph: per hop, the frontier expands via ONE
 # semi-join against the edge list and merges into the visited set
-# (union + distinct); visited is localCheckpoint-ed per hop so hop h+1
+# (union + distinct); visited is pinned per hop so hop h+1
 # never replays hops 1..h. Oracle: unrolled MATERIALIZED CTE hops.
 # =============================================================================
 _BFS_SEEDS = (1, 2)
@@ -2060,7 +2061,7 @@ def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     spark_ = edges.sparkSession
     reached = spark_.createDataFrame(
@@ -2074,9 +2075,7 @@ def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
         bwd = edges.join(
             reached.select(F.col("n").alias("b")), "b", "left_semi"
         ).select(F.col("a").alias("n"))
-        reached = (
-            reached.union(fwd).union(bwd).distinct().localCheckpoint(eager=False)
-        )
+        reached = reached.union(fwd).union(bwd).distinct().transform(pin)
         stats.append((h, reached.count()))
     return spark_.createDataFrame(stats, "hop bigint, n_reached bigint")
 
@@ -2157,7 +2156,7 @@ def orders_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(F.col("split_raw"))
             ).cast("bigint").alias("split"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tr = daily.filter(F.col("x") < F.col("split")).agg(
         F.count("*").alias("n"),
@@ -2620,7 +2619,7 @@ def text_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is doc-grain (or shingle-grain partial-min) rows, never the raw
     # stream — the join-back shipped the FULL stream. The shared
     # distinct subtree stays UNPINNED and computes once per consumer: a
-    # localCheckpoint pin measured SLOWER (1.06 vs 0.74 s — the pinned
+    # pin measured SLOWER (1.06 vs 0.74 s — the pinned
     # frame reports UnknownPartitioning, so both consumers re-exchange
     # the whole stream, plus the block-store write), and at 100 TB a
     # corpus-scale pinned stream is an executor-storage liability the
@@ -3559,7 +3558,7 @@ def events_retention_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("week"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     firsts = uw.groupBy("user_id").agg(F.min("week").alias("cohort"))
     sizes = firsts.groupBy("cohort").agg(F.count("*").alias("n_users"))
@@ -3630,7 +3629,7 @@ def events_stickiness_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     dau = d.groupBy("week", "day").agg(F.count("*").alias("dau"))
     wau = d.groupBy("week").agg(F.countDistinct("user_id").alias("wau"))

@@ -14,7 +14,49 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize `df` and cut its lineage: the engine's one pin policy.
+
+    Pins keep iterative operators (connected components, PageRank,
+    k-core, BFS hops) at a bounded plan depth, and let a frame read by
+    several consumers, or by several actions, compute once. Every pin in
+    the package goes through here; call it as ``df.transform(pin)``, or
+    ``pin(df, eager=True)`` where the frame must exist before the next
+    line runs (an iterative round's convergence probe, a count).
+
+    The medium follows the deployment, not the caller:
+
+    - No checkpoint dir (the default): ``localCheckpoint``. Blocks live
+      in executor storage with no lineage behind them, so no filesystem
+      round-trip, but on a cluster the loss of one executor fails the
+      job unrecoverably.
+    - A checkpoint dir set by ``spark.checkpoint.dir`` or by the
+      deployment's ``SparkContext.setCheckpointDir``: reliable
+      ``checkpoint`` to that dir. The pin survives executor loss at the
+      cost of a write per pin. Nothing in the engine sets the dir.
+
+    The reliable path must not compute the frame twice. A bare lazy
+    ``checkpoint`` does: the first action computes the frame, then Spark
+    runs a second job that recomputes the lineage to write the files.
+    So the reliable checkpoint is stacked on a lazy local pin: the first
+    action fills the local pin's blocks, and the write job that follows
+    reads them (an eager pin, too, computes the frame once). Spark
+    completes only the outermost marked checkpoint, so the inner pin
+    keeps its lineage, and a block lost before the write is recomputed
+    rather than fatal.
+
+    Cleanup: local pin blocks are freed once the frame is dereferenced.
+    Reliable checkpoint files are not deleted unless
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``; an
+    iterative run otherwise leaves one snapshot per round in the store
+    for the caller or the cluster to reap.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager)
+    return df.localCheckpoint(eager=False).checkpoint(eager)
 
 
 def get_spark(

@@ -32,21 +32,34 @@ def test_connected_components_long_chain(spark):
     assert got == {i: 0 for i in range(10)}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir mode: reliable FS checkpoints (cluster posture) must
-    produce identical clusters to the localCheckpoint default."""
+def test_connected_components_reliable_checkpoint(spark, reliable_pins):
+    """With `spark.checkpoint.dir` set, CC's pins are reliable FS
+    checkpoints (cluster posture) and produce the same clusters as the
+    localCheckpoint default."""
+    import pin_runs
+
+    reliable, ck = reliable_pins
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
+        [(i, i + 1) for i in range(1, 6)] + [(10, 11)], "id_a bigint, id_b bigint"
     )
-    got = {
-        r["id"]: r["cluster_id"]
-        for r in connected_components(
-            edges, checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+    local = connected_components(edges)
+    assert reliable["cc"] == pin_runs.rows(local)
+    got = {r["id"]: r["cluster_id"] for r in local.collect()}
+    assert got == {**{i: 1 for i in range(1, 7)}, 10: 10, 11: 10}
     # checkpoint files actually landed on the reliable store
-    assert any((tmp_path / "ckpt").rglob("*"))
+    assert any(ck.rglob("*"))
+
+
+def test_connected_components_drops_null_endpoints(spark):
+    """An edge with a NULL endpoint names no node: it is dropped at
+    entry, no NULL id appears, and the clusters of the other edges are
+    unchanged."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (3, None), (None, 10), (None, None)],
+        "id_a bigint, id_b bigint",
+    )
+    got = {r["id"]: r["cluster_id"] for r in connected_components(edges).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_connected_components_mixed_endpoint_types(spark):

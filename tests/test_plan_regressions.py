@@ -395,21 +395,16 @@ def test_shingle_tokenizer_let_bound_once(spark):
     assert p2.count("split(") == 2
 
 
-def test_pagerank_reliable_checkpoint_dir_matches_local(spark, tmp_path):
-    """checkpoint_dir switches every pin from localCheckpoint (lineage
-    gone with a lost executor) to reliable DataFrame.checkpoint — same
-    ranks, bit for bit (round-6 ADVICE fix, mirrors the
-    connected_components escape hatch)."""
+def test_pagerank_reliable_checkpoint_dir_matches_local(spark, reliable_pins):
+    """With `spark.checkpoint.dir` set, every pagerank pin is a reliable
+    DataFrame.checkpoint instead of a localCheckpoint (lineage gone with a
+    lost executor): same ranks, bit for bit."""
+    import pin_runs
+
     from social_and_media_data_ingestion_spark.operators.graph import pagerank
 
+    reliable, _ = reliable_pins
     spokes = [1, 2, 3, 4, 5]
     rows = [(0, s) for s in spokes] + [(s, 0) for s in spokes]
-    edges = spark.createDataFrame(rows, ["src", "dst"])
-    local = {r.node: r.pr for r in pagerank(edges, iters=4).collect()}
-    reliable = {
-        r.node: r.pr
-        for r in pagerank(
-            edges, iters=4, checkpoint_dir=str(tmp_path / "ck")
-        ).collect()
-    }
-    assert reliable == local
+    edges = spark.createDataFrame(rows, "src bigint, dst bigint")
+    assert reliable["pagerank"] == pin_runs.rows(pagerank(edges, iters=4))

@@ -4,7 +4,7 @@ they must agree EXACTLY with the unpartitioned-window spellings they
 replace, across sizes that straddle partition boundaries, and be
 deterministic across repeated invocations (the round-3 lesson:
 repartitionByRange boundaries are not replay-stable, hence the
-localCheckpoint inside the helpers)."""
+pin inside the helpers)."""
 
 from __future__ import annotations
 
@@ -373,3 +373,65 @@ def test_running_min_decimal_and_string_types(spark):
             dfs, ["id"], "v", out_col="m", num_partitions=8
         ).collect()
     } == {r.id: r.m for r in dfs.withColumn("m", F.min("v").over(w)).collect()}
+
+
+def test_running_min_leading_all_nan_partition(spark):
+    """A leading range partition holding only NaN must not freeze the
+    cross-partition prefix: NaN sorts above every number, so the next
+    partition's minimum replaces it (a plain `m < acc` never does, and
+    every later partition then loses its predecessors' minimum)."""
+    from social_and_media_data_ingestion_spark.operators.scale import (
+        global_running_min,
+    )
+
+    rows = [(i, float("nan")) for i in range(100)] + [
+        (i, float(i)) for i in range(100, 200)
+    ]
+    df = spark.createDataFrame(rows, "id bigint, v double")
+    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
+    want = {
+        r.id: r.m for r in df.withColumn("m", F.min("v").over(w)).collect()
+    }
+    got = {
+        r.id: r.m
+        for r in global_running_min(
+            df, ["id"], "v", out_col="m", num_partitions=4
+        ).collect()
+    }
+    assert set(got) == set(want)
+    for k in want:
+        g, x = got[k], want[k]
+        assert g == x or (g != g and x != x), (k, g, x)
+    assert got[199] == 100.0
+
+
+def test_running_min_exclusive_bigint_vectorized_batches(spark):
+    """Null-free bigint with small Arrow batches: every batch after a
+    partition's first takes the vectorized exclusive branch (shifted
+    numpy prefix min carried across batches)."""
+    from social_and_media_data_ingestion_spark.operators.scale import (
+        global_running_min,
+    )
+
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "13")
+    try:
+        df = spark.createDataFrame(
+            [(i, (i * 37) % 101 - 50) for i in range(400)],
+            "id bigint, v bigint",
+        )
+        w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
+        want = {
+            r.id: r.m
+            for r in df.withColumn("m", F.min("v").over(w)).collect()
+        }
+        got = {
+            r.id: r.m
+            for r in global_running_min(
+                df, ["id"], "v", out_col="m", num_partitions=4, exclusive=True
+            ).collect()
+        }
+        assert got == want
+        assert got[0] is None
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
