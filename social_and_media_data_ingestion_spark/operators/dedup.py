@@ -23,6 +23,8 @@ Scale notes:
   partitions never exchange data.
 - MinHash-LSH candidates: one self-join on (band, band_hash) buckets —
   candidate pairs only, never the n^2 cross join.
+- Jaccard verify of candidates: joins per-document shingle arrays to the
+  candidate pairs, so its volume follows the candidate set.
 """
 
 from __future__ import annotations
@@ -306,9 +308,12 @@ def minhash_lsh_candidates(
     # corpus that built it. LAZY pin (eager=False, round-8 ADVICE):
     # the RDD is marked persistent at construction, so the first
     # action computes it once and all three consumers read the cached
-    # blocks — same dedup as eager — but plan-only callers (the plan
-    # guards) no longer execute the aggregation job just to build the
-    # DataFrame, and no lineage-truncated blocks exist until a caller
+    # blocks — same dedup as eager. Lazy is not free: under AQE,
+    # building the pin runs the shuffle map stages below the
+    # aggregation (the bucket exchange and any exchange of the
+    # caller's lineage) as jobs, because the RDD comes from the final
+    # adaptive plan (see `session.pin`). What it defers is the final
+    # aggregation stage, so no pinned blocks exist until a caller
     # actually runs the query.
     grouped = (
         banded.groupBy("band", "bucket")
@@ -347,10 +352,22 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """(id_a, id_b, jaccard) for pairs with n-gram Jaccard >= threshold.
-    Without `candidates`, pairs come from the inverted shingle index
-    (docs sharing >= 1 shingle) — never a blind cross join. With
-    `candidates` (e.g. from MinHash-LSH) this is the exact verify stage."""
+    """(id_a, id_b, jaccard) for pairs with n-gram Jaccard >= threshold
+    that share >= 1 shingle. Without `candidates`, pairs come from the
+    inverted shingle index — never a blind cross join.
+
+    With `candidates` (e.g. from MinHash-LSH) this is the exact verify
+    stage, and it touches the candidates only: each candidate document
+    gets ONE distinct-shingle array (rows sharing an id union their
+    sets), the arrays join to the (id_a < id_b, deduplicated) pairs on
+    both ends, and the intersection is counted row-locally. Building the
+    inverted index instead would emit every pair sharing a shingle
+    before the candidates could prune it, so the verify would cost as
+    much as the index path no matter how selective the LSH stage is.
+    A reversed (id_a > id_b) candidate is not a pair of this output, as
+    on the index path."""
+    if candidates is not None:
+        return _verify_candidates(df, id_col, text_col, n, threshold, candidates)
     sh = word_shingles(df, id_col, text_col, n)
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
@@ -360,8 +377,6 @@ def ngram_jaccard_pairs(
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("inter"))
     )
-    if candidates is not None:
-        inter = inter.join(candidates, ["id_a", "id_b"], "left_semi")
     sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
     return (
@@ -375,6 +390,43 @@ def ngram_jaccard_pairs(
                 / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
             ).alias("jaccard"),
         )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _verify_candidates(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+    candidates: DataFrame,
+) -> DataFrame:
+    """The candidate path of :func:`ngram_jaccard_pairs`."""
+    pairs = (
+        candidates.select("id_a", "id_b")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .distinct()
+    )
+    ids = pairs.select(F.col("id_a").alias("id")).union(
+        pairs.select(F.col("id_b").alias("id"))
+    )
+    sets = (
+        df.select(F.col(id_col).alias("id"), _shingle_array(text_col, n).alias("sh"))
+        .join(ids, "id", "left_semi")
+        .groupBy("id")
+        .agg(F.array_distinct(F.flatten(F.collect_list("sh"))).alias("sh"))
+    )
+    sa = sets.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sb = sets.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - F.col("inter")
+    return (
+        pairs.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("inter", inter)
+        .filter(F.col("inter") > 0)
+        .select("id_a", "id_b", (F.col("inter") / union).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -448,9 +500,11 @@ def connected_components(
     segments; the build side is the label frame — node-scale, the
     smaller side by construction (|V| vs |2E + V|).
 
-    Lineage: the doubled edge set, the initial labels and every round's
-    labels are eager :func:`session.pin` pins, so the checkpoint medium
-    follows the deployment.
+    Lineage: the projected input edges, the initial labels and every
+    round's labels are eager :func:`session.pin` pins, so the caller's
+    edge lineage runs once and the checkpoint medium follows the
+    deployment. The doubled edge set is a union over the pinned edges,
+    with duplicates kept.
 
     Edges with a NULL `src` or `dst` are dropped at entry: a NULL
     endpoint names no node, so it joins no component and never appears
@@ -458,11 +512,6 @@ def connected_components(
     """
     edges = edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
 
-    # materialize the doubled edge set ONCE: it is joined every round,
-    # and the caller's edge lineage (LSH candidates -> Jaccard verify ->
-    # shingle scans) would otherwise re-execute per iteration x per
-    # action — measured 8.5 s for a 193-edge graph at sf0.1, ~1 s with
-    # the pin (the edge frame is tiny next to the corpus that built it)
     # numeric ids normalize to long (doc_id ints of any width unify);
     # non-numeric ids (entity-resolution NAME nodes) keep their native
     # type — min-label propagation only needs a total order, which
@@ -484,17 +533,20 @@ def connected_components(
             return F.col(c).cast("long")
         return F.col(c).cast("string") if to_string else F.col(c)
 
-    # the doubled edge set is pinned FIRST and everything else derives
-    # from the pinned blocks: the caller's edge lineage (LSH candidates
-    # -> Jaccard verify -> shingle scans) executes exactly twice (the
-    # two union branches), as pre-r14 — deriving nodes/self-loops from
-    # an UNPINNED doubled frame re-executed it four times (measured 2x
-    # wall-clock on corpus_full_curation before this pin was hoisted)
-    doubled = pin(
-        edges.select(_id(src).alias("s"), _id(dst).alias("t"))
-        .union(edges.select(_id(dst).alias("s"), _id(src).alias("t")))
-        .distinct(),
-        eager=True,
+    # materialize the edge set ONCE, FIRST, and derive everything else
+    # from the pinned blocks: it is joined every round, and the
+    # caller's edge lineage (LSH candidates -> Jaccard verify ->
+    # shingle scans) would otherwise re-execute per iteration x per
+    # action — measured 8.5 s for a 193-edge graph at sf0.1, ~1 s with
+    # the pin (the edge frame is tiny next to the corpus that built
+    # it). Pinning the DOUBLED set instead still ran that lineage once
+    # per union branch, as exchange reuse does not merge the two
+    # branches. The doubled set is a map-side union of the pinned
+    # blocks with no distinct and no second pin — a duplicate edge
+    # only feeds min() the same value twice
+    pinned = pin(edges.select(_id(src).alias("s"), _id(dst).alias("t")), eager=True)
+    doubled = pinned.union(
+        pinned.select(F.col("t").alias("s"), F.col("s").alias("t"))
     )
     labels = pin(
         doubled.select("s")
@@ -506,7 +558,7 @@ def connected_components(
     # aggregate through the same join — no separate labels left-join.
     # The self-loop side is the PINNED initial label frame (the node
     # set), so `bi` itself stays unpinned: every iteration reads it as
-    # a map-side union of two pinned block sets — no shuffle, no
+    # a map-side union of pinned block sets — no shuffle, no
     # re-derivation, and no dedup needed (a duplicate self-loop from a
     # (x, x) input edge only feeds the same value to min() twice)
     init = labels

@@ -17,9 +17,11 @@ from __future__ import annotations
 # (tools/verify_local.py runs every query with the identical oracle
 # mechanism).
 PRIORITY_HEAD = [
-    # 38 stale: the one pin policy (session.pin) re-spells every
+    # 39 stale: the one pin policy (session.pin) re-spells every
     # lineage cut, global_running_min's NaN-safe prefix, and
-    # connected_components' NULL-endpoint filter
+    # connected_components' NULL-endpoint filter; then the near-dup
+    # chain's candidate-only Jaccard verify and single edge pin in
+    # connected_components
     "graph_pagerank_purchases",
     "dedup_minhash_calibration",
     "dedup_minhash_lsh_pairs",
@@ -58,7 +60,8 @@ PRIORITY_HEAD = [
     "supplier_revenue_gini",
     "text_rrf_fusion",
     "window_ntile_quartiles",
-    # 12 oldest-evidence re-proofs (newest green row r7)
+    "dedup_ngram_jaccard",
+    # 11 oldest-evidence re-proofs (newest green row r7)
     "dedup_embedding_cosine",
     "dedup_minhash_signatures",
     "emb_cluster_purity",
@@ -70,5 +73,4 @@ PRIORITY_HEAD = [
     "emb_lloyd_centroids",
     "emb_pca_top_component",
     "emb_pq_recall",
-    "emb_pq_topk",
 ]

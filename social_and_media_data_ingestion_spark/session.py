@@ -27,6 +27,13 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     ``pin(df, eager=True)`` where the frame must exist before the next
     line runs (an iterative round's convergence probe, a count).
 
+    A lazy pin defers only the frame's last stage, not all of its work.
+    Building the pinned frame hands Spark the physical plan's RDD, and
+    under AQE that plan is final only once every shuffle below it has
+    run: so the pin call itself runs one job per shuffle map stage of
+    the frame's plan, and the first action runs the rest. A plan with
+    no exchange runs nothing until an action.
+
     The medium follows the deployment, not the caller:
 
     - No checkpoint dir (the default): ``localCheckpoint``. Blocks live

@@ -38,6 +38,22 @@ def rows(df) -> list:
     return sorted(json.loads(json.dumps([list(r) for r in df.collect()])))
 
 
+def tally_udf(spark, return_type: str):
+    """(identity UDF, accumulator): the accumulator counts the rows the
+    UDF computes. The UDF is nondeterministic, so the optimizer neither
+    duplicates it into a pushed-down filter nor collapses it into another
+    projection: each count is one computation of the row."""
+    from pyspark.sql import functions as F
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def tally(x):
+        calls.add(1)
+        return x
+
+    return F.udf(tally, return_type).asNondeterministic(), calls
+
+
 def lazy_pin_computes(spark) -> int:
     """How often a lazily pinned frame's last stage runs over two actions:
     once per group when the pin holds, twice if the first action's
@@ -46,17 +62,12 @@ def lazy_pin_computes(spark) -> int:
 
     from social_and_media_data_ingestion_spark.session import pin
 
-    calls = spark.sparkContext.accumulator(0)
-
-    def tally(x):
-        calls.add(1)
-        return x
-
+    tally, calls = tally_udf(spark, "long")
     df = (
         spark.range(100, numPartitions=4)
         .groupBy((F.col("id") % 10).alias("k"))
         .agg(F.sum("id").alias("s"))
-        .withColumn("s", F.udf(tally, "long")("s"))
+        .withColumn("s", tally("s"))
         .transform(pin)
     )
     df.collect()
