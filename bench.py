@@ -1,20 +1,26 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-compact JSON line on stdout: {"metric": ..., "value": total_sec,
-"unit": "sec", "queries": {name: best_sec}, "sf": ...}.
+"""Benchmark harness: times the HEADLINE registry queries at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata) on
+local[$SPARK_GRAFT_CPUS].
 
-The stdout line is kept COMPACT on purpose: the driver captures only a
-bounded tail of stdout, and round 4's artifact (per-run arrays + spread
-for 50 queries on one line) outgrew that buffer and recorded as
-`parsed: null`. The full self-diagnosing payload — all 3 per-run times
-and the relative spread per query, which lets a round-over-round drift
-be attributed to machine-load variance (wide spread) vs a real plan
-regression (tight spread at a higher level) — is written to
-`BENCH_FULL.json` next to this script and echoed to stderr instead.
+    python bench.py
+    SPARK_GRAFT_SF_DIR=<testdata>/sf0.01 python bench.py
 
-Each query is materialized via a count-collect (no driver-side data pull)
-after a warm-up pass to amortize JVM/session startup out of the first
-measurement.
+Every query is materialized through the noop sink, which computes every
+output column (a count() lets Catalyst prune the projections a row
+count does not need). One global warm-up pass runs first: JVM codegen,
+parquet footers, broadcast paths. Then each query gets one untimed
+priming run, which respawns Python workers reaped while the JVM-only
+queries ran, and 3 timed runs; it reports the best.
+
+All run times go to BENCH_FULL.json next to this script and to stderr.
+The LAST stdout line is one compact JSON object with the keys metric,
+value (the sum of the per-query bests), unit, queries (name -> best),
+sf and cpus; it stays compact because a harness may capture only a
+bounded tail of stdout.
+
+These are wall-clock times and move with the machine's load. The
+regression signal is perfbench/: per-layer event-log counters and
+paired runs (perfbench/METRICS.md).
 """
 
 from __future__ import annotations
@@ -24,7 +30,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from social_and_media_data_ingestion_spark import get_spark
 from social_and_media_data_ingestion_spark.plans.queries import registry
@@ -104,9 +111,7 @@ HEADLINE = [
     # round-7 growth: phonetic-blocked ER (equi-join on the consonant-
     # class key), transitive entity clustering (CC over the pair
     # graph), magic-byte format sniffing (native binary-prefix probe) —
-    # benched so the new families carry throughput artifacts; absent
-    # from BENCH_ANCHOR.json, so vs_anchor ratios skip them until the
-    # anchor is re-pinned on a quiet machine
+    # benched so the new families carry throughput artifacts
     "er_phonetic_blocked_pairs",
     "er_entity_clusters",
     "multimodal_format_sniff",
@@ -118,8 +123,7 @@ HEADLINE = [
     # -> entity report) — benched because it composes the two heaviest
     # ER stages and a pin regression would double the blocking join
     "er_resolution_pipeline",
-    # round-10 growth, anchored from birth at the round-11 re-pin: the
-    # two spec-faithful TPC-H shapes (q4's inferred scan-prune bound,
+    # round-10 growth: the two spec-faithful TPC-H shapes (q4's inferred scan-prune bound,
     # q14's quantize-then-sum) and the native-binary image paths (pure
     # JVM header-dim sniff incl. the bounded JPEG marker walk; stdlib
     # BMP/PPM pixel decode through the mapInPandas stats UDF)
@@ -127,629 +131,63 @@ HEADLINE = [
     "q14_promo_revenue",
     "multimodal_image_dim_sniff",
     "multimodal_image_pixel_stats",
-    # round-11 growth, anchored from birth: the stdlib-zlib PNG pixel
-    # decode (stored-block IDAT inflate + Up/Sub defilter through the
-    # mapInPandas stats UDF) and the pure-Python-LZW GIF pixel decode
-    # (sub-block reassembly + palette lookup through the same UDF)
+    # round-11 growth: the stdlib-zlib PNG pixel decode (stored-block
+    # IDAT inflate + Up/Sub defilter through the mapInPandas stats UDF)
+    # and the pure-Python-LZW GIF pixel decode (sub-block reassembly +
+    # palette lookup through the same UDF)
     "multimodal_png_pixel_stats",
     "multimodal_gif_pixel_stats",
-    # round-12 growth, anchored from birth: the stdlib baseline-JPEG
-    # pixel decode (Huffman entropy decode + dequant + sparse IDCT +
-    # YCbCr->RGB through the mapInPandas stats UDF)
+    # round-12 growth: the stdlib baseline-JPEG pixel decode (Huffman
+    # entropy decode + dequant + sparse IDCT + YCbCr->RGB through the
+    # mapInPandas stats UDF)
     "multimodal_jpeg_pixel_stats",
 ]
 
 
-# r13 opt round (guide §1.4): for these headliners the count() action
-# provably PRUNES the operator's real work — Catalyst drops map-only
-# projections (and even projected pandas_udf columns) that a row count
-# does not need, so their count-timed entries measure little more than
-# a parquet row count. Each gets an ADDITIVE "<name>+noop" entry timed
-# with the noop sink, which computes every output column. The original
-# count()-timed entries are unchanged (anchor continuity + driver
-# round-over-round comparability); twins carry no anchor, so the
-# anchor-relative suspect/rescue machinery skips them by construction.
-NOOP_TWINS = [
-    "f2_keyword_substring_5k",  # whole Aho-Corasick pandas_udf pruned
-    "join_bloom_filter_audit",  # all probe columns pruned (9 -> 0)
-    "pii_redact_documents",  # redaction regexes pruned
-    "dedup_fingerprint",  # sha2 fingerprint pruned
-    "dedup_minhash_signatures",  # minhash permutation math pruned
-    "emb_kmeans_assign",  # centroid-distance math pruned
-    "emb_quantize_int8",  # quantization transform pruned
-    "text_chunk_documents",  # chunk transform partially pruned
-    "doc_pack_contexts",  # packing payload pruned (3 -> 0 scan cols)
-    "multimodal_image_dim_sniff",  # native header-parse exprs pruned
-    "events_decayed_activity",  # decay arithmetic pruned (6 -> 1)
-    "j9_asof_view_purchase",  # carried value columns pruned (8 -> 2)
-]
-
-
-def _timed_action(df, noop: bool) -> int:
-    """The timed materialization: noop-sink write (computes every
-    column) for the +noop twins, count() for the legacy entries."""
-    if noop:
-        df.write.format("noop").mode("overwrite").save()
-        return -1
-    return df.count()
-
-
-def _effective_cpus(spark) -> int | None:
-    """The session's ACTUAL parallelism (local[N] => N), echoed into the
-    stdout line so the driver's scaling probe reads it instead of
-    guessing (r13 verdict: `suspect_cpus_ignored` was a false positive).
-    Tolerant of the fake sessions the bench unit tests inject."""
-    try:
-        return spark.sparkContext.defaultParallelism
-    except Exception:
-        return None
-
-
-def _label_job(spark, desc: str | None) -> None:
-    """setJobDescription (guide §1.5), tolerant of the fake sessions the
-    bench unit tests inject."""
-    try:
-        spark.sparkContext.setJobDescription(desc)
-    except Exception:
-        pass
-
-
-_HERE = os.path.dirname(os.path.abspath(__file__))
-ANCHOR_PATH = os.path.join(_HERE, "BENCH_ANCHOR.json")
-
-
-def _load_anchor(sf_val) -> dict[str, float]:
-    """Committed quiet-machine per-query bests (BENCH_ANCHOR.json) for
-    fixed-point comparison — only meaningful at the anchor's own sf."""
-    try:
-        with open(ANCHOR_PATH) as fh:
-            anchor = json.load(fh)
-        if anchor.get("sf") == sf_val:
-            return dict(anchor.get("queries", {}))
-    except (OSError, ValueError):
-        pass
-    return {}
-
-
-def _anchor_machine_matches() -> bool:
-    """True when the committed anchor's machine fingerprint matches this
-    host. On a different machine (e.g. fewer CPUs) the absolute anchor
-    bests are meaningless and the >= 2x-anchor suspect test would flag
-    most queries, triggering pointless settle/rescue rounds (round-6
-    ADVICE item 4) — the spread test alone handles pollution there."""
-    try:
-        with open(ANCHOR_PATH) as fh:
-            return json.load(fh).get("machine", {}).get("cpus") == os.cpu_count()
-    except (OSError, ValueError):
-        return False
-
-
-def _steady_spread(rs: list[float]) -> float:
-    """(max-min)/min over the 3 FASTEST runs: the steady-state spread.
-    Rescue re-runs keep the polluted samples in `runs` for transparency,
-    so spread over *all* runs would stay pinned at the pollution level
-    forever; spread over the best 3 answers the question the artifact
-    exists for — is the *plan* stable once the machine settles?"""
-    best3 = sorted(rs)[:3]
-    return round((max(best3) - min(best3)) / min(best3), 3) if min(best3) > 0 else 0.0
-
-
-def _preflight_quiet() -> float | None:
-    """Hard pre-flight gate (round-7 verdict): a bench run made under
-    sustained ambient load records machine weather as if it were plan
-    drift (r7's driver artifact inflated untouched queries by a uniform
-    ~1.23x). Waits up to ~3 min for the 1-minute load average to drop
-    under the threshold; returns the offending load if the box never
-    quiets so the caller can tag the artifact DEGRADED (r12: it used
-    to refuse outright, which left r11 with an error-only driver
-    artifact) instead of publishing weather as performance. Threshold
-    overridable via
-    SPARK_GRAFT_BENCH_MAX_LOAD; gate skippable for ad-hoc exploration
-    with SPARK_GRAFT_BENCH_SKIP_PREFLIGHT=1."""
-    if os.environ.get("SPARK_GRAFT_BENCH_SKIP_PREFLIGHT") == "1":
-        return None
-    try:
-        max_load = float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "4.0"))
-    except ValueError:
-        max_load = 4.0
-    load = None
-    for attempt in range(10):
-        try:
-            load = os.getloadavg()[0]
-        except OSError:
-            return None  # platform without loadavg: gate is a no-op
-        if load <= max_load:
-            return None
-        print(
-            f"# preflight: load_1m={load:.2f} > {max_load} "
-            f"(attempt {attempt + 1}/10), settling 20s",
-            file=sys.stderr,
-        )
-        time.sleep(20)
-    return load
-
-
-_CANARY = "q6_forecast_revenue"
-
-# Settle pauses between canary attempts, escalating so the total
-# horizon (~20 min) is on the scale of the machine's documented
-# 30-60 min weather phases instead of an order of magnitude under it.
-_CANARY_SETTLES = (20, 40, 80, 160, 300, 300, 300)
-
-
-def _preflight_canary(
-    spark, reg, sf_dir, anchor, single_attempt: bool = False
-) -> tuple[bool, dict]:
-    """RELATIVE pre-flight gate (round-8 verdict What's-wrong #1): the
-    absolute loadavg gate provably lets weather through — ambient load
-    of 2-4 sails under the 4.0 threshold yet inflates every query a
-    uniform ~1.4x (the r8 driver artifact). So measure the exact
-    condition that poisons the artifact instead: run one cheap anchored
-    query and refuse when its best-of-3 lands >= 1.2x its committed
-    anchor best (threshold via SPARK_GRAFT_BENCH_CANARY_MAX). Retries
-    with settle pauses like the load gate; returns (False, ratio
-    payload) if the box never quiets. On a pass the measured ratio is
-    returned too and lands in BENCH_FULL.json as the run's CALIBRATION
-    number — a future reader can normalize this run against any other
-    without re-deriving a control-group split (day-scale machine-speed
-    variance measured at ~1.26x between two same-box quiet days). No-op
-    (True, {}) when there is no comparable anchor (different machine /
-    missing canary) — the absolute gate and the per-query spread
-    detector still stand.
-
-    MUST run AFTER the global warm-up pass: the anchor bests were
-    measured in a fully JIT-warmed JVM, and a fresh session's first
-    q6 runs land 2-3.5x anchor on a provably idle box (measured,
-    load_1m 0.4) — a pre-warm-up canary would refuse every honest
-    run. Post-warm-up, the canary sees the same JVM state the anchor's
-    measured passes saw, so its ratio isolates AMBIENT load."""
-    if os.environ.get("SPARK_GRAFT_BENCH_SKIP_PREFLIGHT") == "1":
-        return True, {}
-    if not anchor or _CANARY not in anchor or anchor[_CANARY] <= 0:
-        return True, {}
-    if not _anchor_machine_matches():
-        return True, {}
-    try:
-        max_ratio = float(
-            os.environ.get("SPARK_GRAFT_BENCH_CANARY_MAX", "1.2")
-        )
-    except ValueError:
-        max_ratio = 1.2
-    ratio = None
-    # Escalating settle schedule (round-11 verdict item 2): the box's
-    # slow phases last 30-60 MINUTES, so r11's 6x20s horizon could not
-    # outwait one — the driver landed in a slow phase and aborted
-    # deterministically (BENCH_r11.json: ratios walked 1.48x->6.70x
-    # across six 20s settles). 8 attempts with settles escalating
-    # 20s->5min (~20 min total worst case) gives the gate a real chance
-    # of catching a phase boundary; if it still never quiets the caller
-    # now degrades instead of aborting (see main()).
-    # single_attempt (r12 advice): when the load gate has ALREADY tagged
-    # the run degraded, the escalating settle schedule is ~20 min of
-    # sleeps on a box known to be busy before a measured pass that runs
-    # regardless — one attempt still records canary_ratio for the
-    # calibration lens, then fall through
-    settles = [] if single_attempt else _CANARY_SETTLES
-    for attempt in range(len(settles) + 1):
-        rs = []
-        for _ in range(3):
-            t0 = time.time()
-            reg[_CANARY].spark(spark, sf_dir).count()
-            rs.append(time.time() - t0)
-        ratio = min(rs) / anchor[_CANARY]
-        info = {"canary": _CANARY, "canary_ratio": round(ratio, 3)}
-        if ratio < max_ratio:
-            return True, info
-        if attempt < len(settles):
-            print(
-                f"# preflight canary: {_CANARY} best {min(rs):.3f}s = "
-                f"{ratio:.2f}x anchor (attempt {attempt + 1}/"
-                f"{len(settles) + 1}), settling {settles[attempt]}s",
-                file=sys.stderr,
-            )
-            time.sleep(settles[attempt])
-    return False, info
+def _materialize(df) -> None:
+    """Run every output column of `df` and discard the rows."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    write_anchor = "--write-anchor" in sys.argv
-    # --write-anchor-new-era --prev-median X: re-pin when the MACHINE
-    # ERA changed (a new container boot that is persistently faster or
-    # slower than the anchor's era, not a weather swing). The plain
-    # ±5% gate is then structurally unsatisfiable in an honest window —
-    # worse, it passes only when ambient load happens to cancel the era
-    # shift, actively selecting for contaminated pins (observed r11:
-    # six consecutive quiet-window runs read the anchored set at median
-    # 0.80-0.90 of anchor; the one plain-gate-passing canary at 0.965
-    # was a partially loaded window). Era evidence is enforced
-    # mechanically, over the whole anchored set rather than the single
-    # canary query (whose 0.2 s best-of-3 swung 0.77-0.97 between
-    # windows): the operator passes the PREVIOUS quiet run's median
-    # vs_anchor via --prev-median and this run's median must reproduce
-    # it within 0.05 — two independent runs agreeing on the shift via
-    # the SCALE.md §11 control-group lens. Refused whenever the plain
-    # gate would do (median inside ±5%).
-    new_era = "--write-anchor-new-era" in sys.argv
-    prev_median: float | None = None
-    if "--prev-median" in sys.argv:
-        # validated (round-11 ADVICE): flag-last or a non-numeric value
-        # previously tracebacked; print the era-re-pin usage instead
-        idx = sys.argv.index("--prev-median")
-        usage = (
-            "# usage: bench.py --write-anchor-new-era --prev-median X  "
-            "(X = the immediately preceding quiet run's median "
-            "vs_anchor, e.g. 0.80)"
-        )
-        if idx + 1 >= len(sys.argv):
-            print(usage, file=sys.stderr)
-            sys.exit(2)
-        try:
-            prev_median = float(sys.argv[idx + 1])
-        except ValueError:
-            print(usage, file=sys.stderr)
-            sys.exit(2)
-    # --repin-entry NAME (repeatable): refresh ONLY the named anchor
-    # entries from this run's bests, leaving the rest of the era's
-    # fixed point untouched. For when one query's closure changed cost
-    # class after the era pin (r11: dim_sniff's anchor predates the
-    # TIFF format class, so its ratio measured fixture mix, not code).
-    repin: list[str] = [
-        sys.argv[i + 1]
-        for i, a in enumerate(sys.argv)
-        if a == "--repin-entry" and i + 1 < len(sys.argv)
-    ]
-    # twins are measurement entries too (r13 carried item: --repin-entry
-    # used to validate against HEADLINE only, so the 12 +noop twins could
-    # never get anchor entries and stayed invisible to the suspect/rescue
-    # machinery)
-    repinnable = set(HEADLINE) | {f"{n}+noop" for n in NOOP_TWINS}
-    unknown = [q for q in repin if q not in repinnable]
-    if unknown:
-        print(f"# --repin-entry: not headliners: {unknown}", file=sys.stderr)
-        sys.exit(2)
-    # Degraded mode (round-11 verdict item 2): a preflight that never
-    # quiets used to abort with an error-only JSON — honest, but it
-    # left round 11 with ZERO driver-side per-query numbers. Now a
-    # failed gate tags the run "degraded" (with the evidence: load or
-    # canary ratio) and the measured pass runs ANYWAY, so the artifact
-    # always carries per-query numbers that a reader can interpret
-    # through the calibration lens (SCALE.md §11). Anchor writes and
-    # rescue re-runs are disabled in degraded mode — the numbers are
-    # weather-lensed evidence, never a fixed point.
-    degraded: dict = {}
-    bad_load = _preflight_quiet()
-    if bad_load is not None:
-        degraded = {
-            "degraded": True,
-            "degraded_reason": "preflight_load",
-            "load_1m": round(bad_load, 2),
-        }
-        print(
-            f"# DEGRADED: load_1m={bad_load:.2f} never quieted — "
-            f"continuing, artifact will be tagged degraded",
-            file=sys.stderr,
-        )
-    spark = get_spark(app_name="bench")
-    reg = registry()
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    anchor = _load_anchor(sf_val)
+    spark = get_spark(app_name="bench")
+    sc = spark.sparkContext
+    reg = registry()
 
-    # (name, registry key, noop?) measurement entries: every headliner
-    # count-timed as always, plus the +noop twins (see NOOP_TWINS).
-    # Twins resolve against HEADLINE so a monkeypatched test HEADLINE
-    # stays self-contained.
-    entries = [(name, name, False) for name in HEADLINE] + [
-        (f"{name}+noop", name, True) for name in NOOP_TWINS if name in HEADLINE
-    ]
+    for name in HEADLINE:
+        _materialize(reg[name].spark(spark, sf_dir))
 
-    # Warm-up pass: JVM codegen, parquet footers, broadcast paths. The
-    # measured pass is steady-state throughput (what a long-running cluster
-    # job sees), not first-query JIT cost.
-    for _, key, noop in entries:
-        _timed_action(reg[key].spark(spark, sf_dir), noop)
-
-    # canary AFTER warm-up (see _preflight_canary: pre-warm-up it would
-    # refuse honest runs — a fresh JVM runs the canary 2-3.5x anchor)
-    canary_ok, canary_info = _preflight_canary(
-        spark, reg, sf_dir, anchor, single_attempt=bool(degraded)
-    )
-    if not canary_ok:
-        degraded.setdefault("degraded", True)
-        degraded.setdefault("degraded_reason", "preflight_canary")
-        print(
-            f"# DEGRADED: canary never quieted "
-            f"(final ratio {canary_info.get('canary_ratio')}) — "
-            f"continuing, artifact will be tagged degraded",
-            file=sys.stderr,
-        )
-
-    times: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
-    actions = {name: (key, noop) for name, key, noop in entries}
-    for name, key, noop in entries:
-        # Untimed priming run: the global warm-up above decays before
-        # the timed loop reaches late positions (measured r11: Python
-        # workers idle-reaped during a 58-query JVM-only stretch made
-        # the first mapInPandas headliner's first timed run pay ~1-1.5 s
-        # of worker respawn EVERY run, a deterministic spread>1 rescue
-        # that read as "machine not quiet"). One priming execution per
-        # query restores the steady state the measured pass promises;
-        # real ambient contention still shows across the 3 timed runs,
-        # so the rescue/zero-rerun quiet attestation keeps its meaning.
-        _label_job(spark, f"bench:{name}")
-        _timed_action(reg[key].spark(spark, sf_dir), noop)
-        # 3 measured runs, ALL recorded; headline value is the best
-        # (steady-state throughput, robust to one-off scheduler/GC
-        # hiccups on a shared machine) but the full spread stays in the
-        # artifact for drift attribution
-        rs: list[float] = []
-        n = 0
+    for name in HEADLINE:
+        sc.setJobDescription(f"bench:{name}")
+        _materialize(reg[name].spark(spark, sf_dir))
+        rs = []
         for _ in range(3):
-            t0 = time.time()
-            n = _timed_action(reg[key].spark(spark, sf_dir), noop)
-            rs.append(round(time.time() - t0, 3))
+            t0 = time.perf_counter()
+            _materialize(reg[name].spark(spark, sf_dir))
+            rs.append(round(time.perf_counter() - t0, 3))
         runs[name] = rs
-        times[name] = min(rs)
-        # noop-sink twins have no row count (the sink discards rows); the
-        # count-timed entries keep theirs as a sanity signal (r13 ADVICE:
-        # "-1 rows" was a confusing artifact line)
-        rows_note = "noop sink" if noop else f"{n} rows"
-        print(f"# {name}: {rows_note} in {times[name]}s (runs: {rs})", file=sys.stderr)
-    _label_job(spark, None)
+        print(f"# {name}: best {min(rs)}s (runs: {rs})", file=sys.stderr)
+    sc.setJobDescription(None)
 
-    # Pollution detector (round-5 verdict item 2): a shared machine can
-    # hand a query 3 slow runs in a row (r5 recorded 36.0/13.0/9.3 s for
-    # a query that runs ~3 s quiet) and the artifact then masquerades as
-    # a plan regression. A query is SUSPECT if its steady spread is
-    # > 1.0 or its best is >= 2x the committed anchor best; suspects get
-    # up to two rescue passes (2 extra runs each) after a settle pause.
-    reruns: dict[str, int] = {}
-    anchor_comparable = _anchor_machine_matches()
-    # In degraded mode the suspect tests are meaningless (a slow phase
-    # puts EVERY query >= 2x anchor, so rescue would re-run the whole
-    # set twice for nothing) — the artifact is already tagged as
-    # weather-lensed, so ship the single measured pass as-is.
-    for _attempt in range(0 if degraded else 2):
-        suspects = [
-            name
-            for name, _, _ in entries
-            if _steady_spread(runs[name]) > 1.0
-            or (
-                anchor_comparable
-                and name in anchor
-                and times[name] >= 2.0 * anchor[name]
-            )
-        ]
-        if not suspects:
-            break
-        print(f"# pollution suspects, re-running: {suspects}", file=sys.stderr)
-        time.sleep(10)  # let the ambient load settle
-        for name in suspects:
-            key, noop = actions[name]
-            for _ in range(2):
-                t0 = time.time()
-                _timed_action(reg[key].spark(spark, sf_dir), noop)
-                runs[name].append(round(time.time() - t0, 3))
-            reruns[name] = reruns.get(name, 0) + 2
-            times[name] = min(runs[name])
-
-    # headline value stays the sum over HEADLINE's count-timed entries
-    # (round-over-round comparability); the +noop twins are additive
-    # per-query evidence and never enter the total
-    total = round(sum(times[n] for n in HEADLINE), 3)
-    spread = {name: _steady_spread(rs) for name, rs in runs.items()}
-    # Full self-diagnosing payload → file + stderr (NOT stdout: the
-    # driver's stdout tail buffer is bounded; see module docstring).
-    full = {
+    best = {name: min(rs) for name, rs in runs.items()}
+    summary = {
         "metric": "headline_queries_total_runtime",
-        "value": total,
+        "value": round(sum(best.values()), 3),
         "unit": "sec",
-        "queries": times,
-        "runs": runs,
-        "rel_spread": spread,
-        "reruns": reruns,
+        "queries": best,
         "sf": sf_val,
-        **canary_info,  # the run's calibration number (see _preflight_canary)
-        **degraded,  # weather-lens tags when a preflight gate failed
+        # the session's actual parallelism (local[N] -> N)
+        "cpus": sc.defaultParallelism,
     }
-    if anchor:
-        full["vs_anchor"] = {
-            name: round(times[name] / anchor[name], 3)
-            for name in HEADLINE
-            if name in anchor and anchor[name] > 0
-        }
-        anchored_total = sum(anchor[n] for n in HEADLINE if n in anchor)
-        if anchored_total:
-            full["vs_anchor_total"] = round(
-                sum(times[n] for n in HEADLINE if n in anchor) / anchored_total, 3
-            )
-    full_path = os.path.join(_HERE, "BENCH_FULL.json")
-    with open(full_path, "w") as fh:
+    full = {**summary, "runs": runs}
+    with open(os.path.join(_HERE, "BENCH_FULL.json"), "w") as fh:
         json.dump(full, fh, indent=1)
     print(json.dumps(full), file=sys.stderr)
-    if degraded:
-        # a weather-lensed run must never become a fixed point
-        write_anchor = False
-        new_era = False
-        repin = []
-    if write_anchor and anchor and _anchor_machine_matches():
-        # A re-pin is only valid from a UNIFORMLY quiet run (SCALE.md
-        # §11 corollary: the Aug-14 anchor pinned under decaying load
-        # manufactured position-correlated "drift"). Gate on the run's
-        # own calibration evidence instead of trusting the operator:
-        # canary within ±5% of the OLD anchor and zero suspect reruns.
-        # Both r11 re-pin attempts failed exactly this way (canary
-        # 1.135 / 1.176 on a loadavg-0.04 box — ambient weather the
-        # preflight's 1.2x ceiling admits but a fixed point must not).
-        cr = canary_info.get("canary_ratio")
-        if reruns or cr is None or not (0.95 <= cr <= 1.05):
-            print(
-                f"# anchor NOT written: run not uniformly quiet "
-                f"(canary_ratio={cr}, reruns={sorted(reruns)}) — "
-                f"re-run in a quieter window",
-                file=sys.stderr,
-            )
-            write_anchor = False
-    era_note = ""
-    if new_era and anchor and _anchor_machine_matches():
-        va = full.get("vs_anchor") or {}
-        med = sorted(va.values())[len(va) // 2] if va else None
-        # A rescued query is acceptable evidence IF its recovery is
-        # clean: the burst that triggered the rescue must be gone from
-        # its last three runs (the pin uses the min over 5+ runs — MORE
-        # evidence than an unrescued query, not less). What an era pin
-        # cannot tolerate is broad pollution, so at most 2 rescued
-        # queries.
-        recovered = all(
-            (max(runs[q][-3:]) - min(runs[q][-3:])) / min(runs[q][-3:]) <= 0.5
-            for q in reruns
-        )
-        ok = (
-            med is not None
-            and prev_median is not None
-            and abs(med - prev_median) <= 0.05
-            and not 0.95 <= med <= 1.05  # plain --write-anchor owns ±5%
-            and len(reruns) <= 2
-            and recovered
-        )
-        if ok:
-            # keep the superseded era's fixed point for cross-era reads
-            # (git history holds the deeper lineage)
-            prev_path = os.path.join(_HERE, "BENCH_ANCHOR_PREV.json")
-            with open(ANCHOR_PATH) as fh_in, open(prev_path, "w") as fh_out:
-                fh_out.write(fh_in.read())
-            era_note = (
-                f"; era re-pin: this era runs the previous anchor's "
-                f"query set at median {med} of its anchors (previous "
-                f"quiet run: {prev_median}, agreement ±0.05; canary "
-                f"{canary_info.get('canary_ratio')}); previous era "
-                f"preserved in BENCH_ANCHOR_PREV.json"
-            )
-            write_anchor = True
-            print(
-                f"# era re-pin accepted: median {med} vs prev "
-                f"{prev_median}, reruns={sorted(reruns)} (recovered)",
-                file=sys.stderr,
-            )
-        else:
-            print(
-                f"# era re-pin REFUSED: median={med}, "
-                f"prev_median={prev_median}, reruns={sorted(reruns)}, "
-                f"recovered={recovered} — needs two-run median "
-                f"agreement ±0.05, a shift outside ±5% (inside it, "
-                f"plain --write-anchor applies), and at most 2 rescued "
-                f"queries with clean last-3 recovery",
-                file=sys.stderr,
-            )
-    if write_anchor:
-        # Pin THIS run's bests as the fixed comparison anchor (run it on
-        # a quiet machine): round-over-round deltas then read against a
-        # committed fixed point instead of last round's weather.
-        fingerprint = {"cpus": os.cpu_count()}
-        try:
-            fingerprint["load_1m"] = round(os.getloadavg()[0], 2)
-        except OSError:
-            pass
-        with open(ANCHOR_PATH, "w") as fh:
-            json.dump(
-                {
-                    "queries": times,
-                    "sf": sf_val,
-                    "machine": fingerprint,
-                    "note": "quiet-machine per-query bests; bench.py emits "
-                    "vs_anchor ratios against this fixed point" + era_note,
-                },
-                fh,
-                indent=1,
-            )
-        print(f"# anchor written: {ANCHOR_PATH}", file=sys.stderr)
-    if repin and anchor and _anchor_machine_matches():
-        # Single-entry refresh: uniform-quiet evidence, zero rescue
-        # re-runs, and rewrites ONLY the named entries — the other
-        # entries' fixed point stays one-era-old rather than drifting
-        # with every refresh. Quiet evidence is EITHER gate:
-        #   (a) the canary within ±5% of its anchor entry — the
-        #       --write-anchor bar; or
-        #   (b) vs_anchor_total within ±5% over >= 10 anchored
-        #       headliners — the whole fixed point agreeing is far
-        #       stronger evidence than one sub-second query's
-        #       best-of-3 (observed r12: three consecutive clean runs
-        #       read the 60-entry total at 0.997/1.087/0.972 while the
-        #       0.2 s canary wobbled 1.07-1.16 and vetoed every one).
-        cr = canary_info.get("canary_ratio")
-        vat = full.get("vs_anchor_total")
-        n_anchored = len(full.get("vs_anchor") or {})
-        quiet = (cr is not None and 0.95 <= cr <= 1.05) or (
-            vat is not None and n_anchored >= 10 and 0.95 <= vat <= 1.05
-        )
-        # r12 advice: the uniform-quiet gate never looked at the
-        # repinned query ITSELF (a brand-new entry has no anchor ratio,
-        # so it is invisible to both the rescue-suspect test and
-        # vs_anchor_total) — also require the entry's own 3-run spread
-        # to be tight, so an isolated transient spike on just that
-        # query cannot be pinned as its fixed point
-        spread_bad = {
-            q: round(max(runs[q]) / min(runs[q]), 3)
-            for q in repin
-            if q in runs and min(runs[q]) > 0
-            and max(runs[q]) / min(runs[q]) > 1.10
-        }
-        # the spread gate is PER ENTRY (r13): one entry's transient
-        # spike must not veto pinning the entries whose own 3 runs
-        # were tight — quiet windows are the scarce resource, and the
-        # global gates (canary/total/reruns) already attest the run
-        eligible = [q for q in repin if q not in spread_bad]
-        if reruns or not quiet or not eligible:
-            print(
-                f"# repin-entry NOT written: run not uniformly quiet "
-                f"(canary_ratio={cr}, vs_anchor_total={vat}, "
-                f"reruns={sorted(reruns)}, "
-                f"repin_run_spread_over_1.10={spread_bad})",
-                file=sys.stderr,
-            )
-        else:
-            with open(ANCHOR_PATH) as fh:
-                cur = json.load(fh)
-            for q in eligible:
-                cur["queries"][q] = times[q]
-            with open(ANCHOR_PATH, "w") as fh:
-                json.dump(cur, fh, indent=1)
-            print(
-                f"# anchor entries re-pinned {sorted(eligible)} "
-                f"(canary {cr}, vs_anchor_total {vat}"
-                + (
-                    f"; skipped, own-spread>1.10: {spread_bad}"
-                    if spread_bad
-                    else ""
-                )
-                + f"): {ANCHOR_PATH}",
-                file=sys.stderr,
-            )
-    # Compact final stdout line: best-only per query, 3 dp. One scalar
-    # anchor ratio only — the per-query ratios live in BENCH_FULL.json
-    # (stdout must stay inside the driver's bounded tail buffer).
-    compact = {
-        "metric": "headline_queries_total_runtime",
-        "value": total,
-        "unit": "sec",
-        "queries": {k: round(v, 3) for k, v in times.items()},
-        "sf": sf_val,
-        # the EFFECTIVE core count the session ran with (r13 verdict:
-        # the driver's scaling probe guessed, and mis-flagged the bench
-        # as ignoring $SPARK_GRAFT_CPUS — echo it so it never has to)
-        "cpus": _effective_cpus(spark),
-    }
-    if "vs_anchor_total" in full:
-        compact["vs_anchor_total"] = full["vs_anchor_total"]
-    if degraded:
-        # the driver's artifact must carry the weather lens inline:
-        # per-query numbers + the evidence they were taken in weather
-        compact.update(degraded)
-        if "canary_ratio" in canary_info:
-            compact["canary_ratio"] = canary_info["canary_ratio"]
-    print(json.dumps(compact))
+    print(json.dumps(summary))
 
 
 if __name__ == "__main__":

@@ -421,7 +421,9 @@ def _centroid_sim_structs(vec_col: str, cents: list[tuple[int, list[float]]]):
     vq = _qident(vec_col)
     for cid, cv in cents:
         arr = _sql_arr(cv)
-        cs = f"{_sql_dot(vq, arr)} / ({_sql_norm(vq)} * {_sql_norm(arr)})"
+        # try_divide: a vector whose squared components all underflow
+        # has norm 0; its cosine is NULL, not an ANSI divide-by-zero
+        cs = f"try_divide({_sql_dot(vq, arr)}, {_sql_norm(vq)} * {_sql_norm(arr)})"
         entries.append(f"named_struct('cs', {cs}, 'neg_cid', {-int(cid)})")
     return F.expr("array(" + ",".join(entries) + ")")
 
@@ -449,7 +451,9 @@ def lloyd_centroids(
     decimals so the refined centroids are cross-engine reproducible
     (float summation order differs between engines; 1e-6 rounding
     absorbs it). Clusters that lose all members drop out — their id
-    simply stops appearing (spherical k-means convention).
+    simply stops appearing (spherical k-means convention). So do
+    zero-norm seeds and centroids whose mean rounds to all zeros (a
+    cluster of denormal vectors): cosine to them is undefined.
 
     Scale: per round, assignment is MAP-ONLY (the k current centroids are
     bounded driver state embedded as plan literals — no corpus x k
@@ -465,11 +469,15 @@ def lloyd_centroids(
         )
         .collect()
     )
-    cents = [(int(r.centroid_id), list(r.cent_vec)) for r in seed_rows]
-    if not cents:  # empty corpus -> no centroids (r7 empty-tables probe)
-        return []
+    cents = [
+        (int(r.centroid_id), list(r.cent_vec))
+        for r in seed_rows
+        if _has_norm(r.cent_vec)
+    ]
     vecs = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     for _ in range(iters):
+        if not cents:  # empty corpus (r7 empty-tables probe) or all zero
+            break
         assigned = vecs.select(
             _nearest_centroid_expr("v", cents).alias("centroid_id"), "v"
         )
@@ -484,11 +492,18 @@ def lloyd_centroids(
                 F.transform("sm", lambda s: s.getField("mx")).alias("cent_vec"),
             )
         )
-        cents = [
-            (int(r.centroid_id), list(r.cent_vec)) for r in cent_df.collect()
-        ]
-        cents.sort()
+        cents = sorted(
+            (int(r.centroid_id), list(r.cent_vec))
+            for r in cent_df.collect()
+            if _has_norm(r.cent_vec)
+        )
     return cents
+
+
+def _has_norm(vec: list[float]) -> bool:
+    """True unless every squared component is 0 in double arithmetic,
+    which is when the engines' sqrt(sum(x * x)) norm is 0."""
+    return any(x * x for x in vec)
 
 
 def lloyd_centroids_df(

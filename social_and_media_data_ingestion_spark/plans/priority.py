@@ -61,16 +61,21 @@ PRIORITY_HEAD = [
     "text_rrf_fusion",
     "window_ntile_quartiles",
     "dedup_ngram_jaccard",
-    # 11 oldest-evidence re-proofs (newest green row r7)
-    "dedup_embedding_cosine",
-    "dedup_minhash_signatures",
+    # 8 stale: sessionize's microsecond gap compare, and the Lloyd
+    # family's zero-norm centroid drop plus try_divide in the centroid
+    # cosine
     "emb_cluster_purity",
-    "emb_dim_audit",
-    "emb_dim_variance",
-    "emb_hard_negatives",
     "emb_kmeans_assign",
     "emb_kmeans_update",
     "emb_lloyd_centroids",
-    "emb_pca_top_component",
-    "emb_pq_recall",
+    "sim_ivf_lloyd_topk",
+    "sim_ivf_topk",
+    "sim_retrieval_mrr",
+    "events_sessionize",
+    # runs sim_ivf_lloyd_topk's plan through a registry lookup the
+    # ledger does not follow
+    "sim_ivf_lloyd_recall",
+    # 2 oldest-evidence re-proofs (newest green row r7)
+    "dedup_embedding_cosine",
+    "dedup_minhash_signatures",
 ]

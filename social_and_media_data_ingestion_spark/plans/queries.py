@@ -1097,9 +1097,11 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
+    # microsecond gap, like the oracle's INTERVAL compare: a long cast
+    # floors to whole seconds, and a 1800.3 s gap would read as 1800
     new_session = F.when(
         prev.isNull()
-        | (F.col("ts").cast("long") - prev.cast("long") > 1800),
+        | (F.unix_micros("ts") - F.unix_micros(prev) > 1_800_000_000),
         1,
     ).otherwise(0)
     return (
@@ -1668,13 +1670,15 @@ _LLOYD_ITERS = 2
 def _lloyd_cte_sql(n_centroids: int, iters: int) -> str:
     """DuckDB CTE chain cent0 -> (a0, cent1) -> ... mirroring
     similarity.lloyd_centroids exactly (argmax assign with centroid-id
-    tie-break; element-wise mean rounded to 6dp)."""
+    tie-break; element-wise mean rounded to 6dp; zero-norm seeds and
+    all-zero means dropped)."""
     # valid_embeddings: the composing oracles all define the
     # valid-vector CTE at their WITH head (plans/tables.vectors twin)
     parts = [
-        f"cent0 AS (SELECT vec_id AS centroid_id, "
+        f"cent0 AS (SELECT * FROM (SELECT vec_id AS centroid_id, "
         f"list_transform(embedding, x -> x::DOUBLE) AS ce "
-        f"FROM valid_embeddings ORDER BY vec_id LIMIT {n_centroids})"
+        f"FROM valid_embeddings ORDER BY vec_id LIMIT {n_centroids}) "
+        f"WHERE list_sum(list_transform(ce, x -> x * x)) > 0)"
     ]
     for r in range(iters):
         parts.append(
@@ -1696,7 +1700,7 @@ def _lloyd_cte_sql(n_centroids: int, iters: int) -> str:
                  generate_subscripts(embedding, 1) AS j
           FROM a{r}
         ) GROUP BY 1, 2
-      ) GROUP BY 1
+      ) GROUP BY 1 HAVING sum(v * v) > 0
     )"""
         )
     return ",\n    ".join(parts)

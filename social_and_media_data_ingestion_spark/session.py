@@ -66,6 +66,17 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     return df.localCheckpoint(eager=False).checkpoint(eager)
 
 
+def _default_driver_memory() -> str:
+    """48g, or half the machine's physical memory when that is less: a
+    driver heap the box cannot back lets the JVM fill the memory and get
+    killed."""
+    try:
+        half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    except (AttributeError, OSError, ValueError):  # no sysconf names
+        return "48g"
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "social_and_media_data_ingestion_spark",
     master: str | None = None,
@@ -85,7 +96,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Let the planner pick shuffled-hash over sort-merge when its

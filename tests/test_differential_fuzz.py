@@ -68,7 +68,9 @@ from test_skew_stress import _single_table_queries
 
 _ROUND = 13
 _DET_SEEDS = [1000 + _ROUND]
-_EXT_SEEDS = [2000 + _ROUND]
+# 2016/2017 stay pinned: their denormal embeddings rounded a Lloyd mean
+# to an all-zero centroid, whose cosine divided by a zero norm
+_EXT_SEEDS = [2000 + _ROUND, 2016, 2017]
 
 # The fuzz tables VIOLATE the PK on purpose (birthday-collided ids).
 # Queries whose two spellings are genuinely ambiguous per duplicated id

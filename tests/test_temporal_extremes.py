@@ -193,7 +193,7 @@ def test_sessionize_across_year_boundary(spark, extreme_events_dir):
     clusters merge into one session per user, while the isolated
     anchors (decades apart) each start a new one. The expectation is
     computed INDEPENDENTLY in Python from the fixture rows (sort per
-    user on floor-second timestamps, count gaps > 1800 s) and compared
+    user on microsecond timestamps, count gaps > 1800 s) and compared
     against the shipped registry query's n_sessions — a third engine
     breaking any tie between Spark and DuckDB."""
     import datetime as dt
@@ -213,12 +213,11 @@ def test_sessionize_across_year_boundary(spark, extreme_events_dir):
     per_user: dict[int, list[int]] = {}
     epoch = dt.datetime(1970, 1, 1)
     for r in rows:
-        # floor to whole seconds the way the query's long-cast does
-        secs = int((r.ts - epoch).total_seconds() // 1)
-        per_user.setdefault(r.user_id, []).append(secs)
+        micros = (r.ts - epoch) // dt.timedelta(microseconds=1)
+        per_user.setdefault(r.user_id, []).append(micros)
     for uid, ts_list in per_user.items():
         ts_list.sort()
         want = 1 + sum(
-            1 for a, b in zip(ts_list, ts_list[1:]) if b - a > 1800
+            1 for a, b in zip(ts_list, ts_list[1:]) if b - a > 1_800_000_000
         )
         assert got[uid] == want, (uid, got[uid], want)
