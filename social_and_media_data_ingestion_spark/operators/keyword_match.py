@@ -8,14 +8,22 @@
 3. `extract_matched_terms(col, keywords)` — per-row array of matched
    keywords (ref parser_media_articles.py:87: `str.findall` -> list).
 
-Physical strategy: a single compiled regex alternation evaluated inside
-WholeStageCodegen (one pattern per task, JVM-side). For very large
-keyword sets (>= AHOCORASICK_THRESHOLD) a regex alternation degrades to
-O(text * patterns) per row, so we switch to an Arrow-batched pandas UDF
-running a real Aho-Corasick automaton (stdlib-only: dict-goto trie +
-BFS failure links, O(text) per row INDEPENDENT of keyword count). The
-automaton is built lazily ONCE per Python worker from the pickled
-keyword tuple and memoized — batches pay a dict lookup, not a rebuild.
+Physical strategy: up to CONTAINS_CHAIN_THRESHOLD keywords, an OR chain
+of `lower(col) CONTAINS kw`. Above it, ONE compiled regex evaluated
+inside WholeStageCodegen (one pattern per task, JVM-side), factored as a
+character trie of the keywords (`substring_trie_pattern`). A flat
+`kw0|kw1|...` alternation makes java.util.regex try every keyword at
+every text position; the trie tries one branch per distinct next
+character, and matches exactly the same texts. `substring_any_pattern`
+keeps the flat spelling, which the DuckDB oracles embed as an
+independent check; `matches_any_word` and `extract_matched_terms` stay
+on flat alternations (the latter's output depends on alternation
+order). For very large keyword sets (>= AHOCORASICK_THRESHOLD) we switch
+to an Arrow-batched pandas UDF running a real Aho-Corasick automaton
+(stdlib-only: dict-goto trie + BFS failure links, O(text) per row
+INDEPENDENT of keyword count). The automaton is built lazily ONCE per
+Python worker from the pickled keyword tuple and memoized — batches pay
+a dict lookup, not a rebuild.
 
 All builders take the keyword list driver-side: keyword dims are small
 (thousands), so they are plan-time literals — the same decision the
@@ -26,6 +34,8 @@ spelling (for keyword dims too large to inline) is
 
 from __future__ import annotations
 
+import itertools
+import os
 import re
 from collections.abc import Sequence
 
@@ -34,7 +44,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-AHOCORASICK_THRESHOLD = 2000  # alternation size beyond which rlike degrades
+# Keyword count from which the Aho-Corasick UDF replaces the trie rlike.
+# Over the 12,000 parsed perfbench ingest_reddit lines (title + selftext,
+# 4 cores, best of 3), 2,000 / 5,000 random 4-10-letter keywords took
+# 0.66 / 0.57 s as trie rlike and 0.87 / 0.78 s as the UDF: the same
+# order, so the crossover is not sharp. Past it the UDF is kept for its
+# bound: one dict step per character whatever the keywords, where the
+# regex probes every branch of a node in turn and walks as deep as the
+# text follows a shared prefix.
+AHOCORASICK_THRESHOLD = 2000
 CONTAINS_CHAIN_THRESHOLD = 16  # below this, OR-chained UTF8String.contains
 # beats a regex alternation: no NFA, pure memcmp-style scans inside
 # WholeStageCodegen, and Catalyst can short-circuit the disjunction.
@@ -63,6 +81,40 @@ def substring_any_pattern(keywords: Sequence[str]) -> str:
     return "|".join(_java_escape(k.lower()) for k in keywords)
 
 
+def _factor(words: list[str]) -> list[str]:
+    """Top-level alternatives of a sorted, prefix-free word list,
+    factored on their shared prefixes."""
+    if len(words) == 1:
+        return [_java_escape(words[0])]
+    # sorted -> the group's common prefix is that of its first and last
+    n = len(os.path.commonprefix([words[0], words[-1]]))
+    if n:
+        # the suffixes start with >= 2 distinct characters: a branch point
+        rest = "|".join(_factor([w[n:] for w in words]))
+        return [f"{_java_escape(words[0][:n])}(?:{rest})"]
+    return [
+        alt
+        for _, branch in itertools.groupby(words, key=lambda w: w[0])
+        for alt in _factor(list(branch))
+    ]
+
+
+def substring_trie_pattern(keywords: Sequence[str]) -> str:
+    """`substring_any_pattern` spelled as a character trie of the sorted,
+    deduplicated, lowercased keywords: an unanchored search finds a
+    match in exactly the same texts. A run of single-child nodes is one
+    literal and only a branch point opens a group. A keyword that has a
+    shorter keyword as a prefix is dropped: the shorter one already
+    matches wherever it would. A regex engine then probes one branch per
+    distinct next character instead of one per keyword at every text
+    position."""
+    words: list[str] = []
+    for w in sorted(set(k.lower() for k in keywords)):
+        if not (words and w.startswith(words[-1])):
+            words.append(w)
+    return "|".join(_factor(words))
+
+
 def word_boundary_pattern(keywords: Sequence[str]) -> str:
     """(?i)\\b(...)\\b alternation: word-bounded, case-insensitive."""
     alts = "|".join(_java_escape(k) for k in expand_hyphen_variants(keywords))
@@ -83,7 +135,7 @@ def contains_any(cols: Sequence[Column | str], keywords: Sequence[str]) -> Colum
             for k in keywords:
                 pred = pred | low.contains(k.lower())
         return pred
-    pat = substring_any_pattern(keywords)
+    pat = substring_trie_pattern(keywords)
     for c in cols:
         col = F.col(c) if isinstance(c, str) else c
         pred = pred | F.lower(col).rlike(pat)

@@ -72,10 +72,8 @@ PRIORITY_HEAD = [
     "sim_ivf_topk",
     "sim_retrieval_mrr",
     "events_sessionize",
-    # runs sim_ivf_lloyd_topk's plan through a registry lookup the
-    # ledger does not follow
-    "sim_ivf_lloyd_recall",
-    # 2 oldest-evidence re-proofs (newest green row r7)
-    "dedup_embedding_cosine",
-    "dedup_minhash_signatures",
+    # 3 stale: contains_any's trie-factored rlike alternation
+    "f2_keyword_substring",
+    "flagship_submission_extract",
+    "f2_keyword_substring_5k",
 ]

@@ -86,29 +86,37 @@ def _extract(
     without it, scan parallelism is capped at the .zst FILE COUNT (zstd
     is non-splittable — SCALE.md), which silently dominates wall-time
     when files are few and large."""
+    # created_utc must parse as an integer; rows where it doesn't are bad
+    # (same skip semantics as the reference's int() + except path). A bad
+    # row's _corrupt_record is its raw line, or for a parsed row with a
+    # bad created_utc, the row re-serialized as JSON.
+    has_ts = F.col("created_utc").try_cast("long").isNotNull()
+    cols = [f.name for f in schema.fields if f.name != CORRUPT_COL]
+    as_json = F.to_json(F.struct(*cols))
     if landing_dir is not None:
         good_path, bad_path = f"{landing_dir}/good", f"{landing_dir}/bad"
         landing_to_parquet(spark, input_path, schema, good_path, bad_dst=bad_path)
-        good_schema = T.StructType(
-            [f for f in schema.fields if f.name != CORRUPT_COL]
-        )
+        good_schema = T.StructType([schema[c] for c in cols])
         good = spark.read.schema(good_schema).parquet(good_path)
-        bad = spark.read.schema(schema).parquet(bad_path)
+        bad = (
+            spark.read.schema(schema)
+            .parquet(bad_path)
+            .select(*cols, CORRUPT_COL)
+            .unionByName(good.filter(~has_ts).withColumn(CORRUPT_COL, as_json))
+        )
     else:
         raw = read_ndjson(spark, input_path, schema)
-        good, bad = split_corrupt(raw)
-    # created_utc must parse as an integer; rows where it doesn't are bad
-    # (same skip semantics as the reference's int() + except path).
-    has_ts = F.col("created_utc").try_cast("long").isNotNull()
-    bad_ts = good.filter(~has_ts).withColumn(
-        "_corrupt_record", F.to_json(F.struct(*good.columns))
-    )
+        good, _ = split_corrupt(raw)
+        # one filter over the parsed scan: the input is decompressed and
+        # parsed once for the bad rows
+        bad = raw.filter(F.col(CORRUPT_COL).isNotNull() | ~has_ts).select(
+            *cols, F.coalesce(F.col(CORRUPT_COL), as_json).alias(CORRUPT_COL)
+        )
     valid = good.filter(has_ts)
     matched = _apply_allowlist(valid, subreddit_col, allowlist).filter(
         auto_contains_any(text_cols, list(keywords))
     )
-    projected = project_fields_defaulted(matched, fields)
-    return projected, bad.select(*bad_ts.columns).unionByName(bad_ts)
+    return project_fields_defaulted(matched, fields), bad
 
 
 def extract_submissions(

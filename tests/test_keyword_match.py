@@ -10,11 +10,14 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from pyspark.sql import functions as F
+
 from social_and_media_data_ingestion_spark.operators.keyword_match import (
     contains_any,
     contains_any_large,
     expand_hyphen_variants,
     matches_any_word,
+    substring_any_pattern,
 )
 
 KWS = ["spark", "data-set", "über"]
@@ -95,6 +98,72 @@ def test_property_substring_equivalence(spark, texts):
     got = run_filter(spark, list(set(texts)), contains_any(["text"], KWS))
     exp = {t for t in set(texts) if naive_substring(t, KWS)}
     assert got == exp
+
+
+# --- trie-factored alternation (contains_any, 17..1999 keywords) -----------
+
+# regex metacharacters, two letters to share prefixes, letters whose case
+# mapping changes length (ß, İ), and a character outside the BMP
+_TRIE_ALPHABET = list("ab\\.[]{}()*+?^$|") + ["ß", "İ", "Ä", "\U0001F600"]
+
+
+@st.composite
+def _trie_cases(draw):
+    char = st.sampled_from(_TRIE_ALPHABET)
+    kws = draw(st.lists(st.text(char, min_size=1, max_size=6), min_size=17, max_size=60))
+    kws += [k[: len(k) // 2 + 1] for k in kws[:4]]  # prefixes of others
+    kws += kws[4:6] + [k.upper() for k in kws[6:10]]  # duplicates, case
+    if draw(st.integers(0, 4)) == 0:
+        kws.append("")
+    kws = draw(st.permutations(kws))
+    texts = draw(st.lists(st.text(char, max_size=24), max_size=12))
+    # keyword hits in another case, and near misses one character short
+    for k in draw(st.lists(st.sampled_from(kws), max_size=8)):
+        texts += [f"x{k.upper()}y", f"x{k[:-1]}y"]
+    return kws, texts
+
+
+@settings(max_examples=30, deadline=None, suppress_health_check=list(HealthCheck))
+@given(_trie_cases())
+def test_trie_alternation_matches_flat_and_naive(spark, case):
+    kws, texts = case
+    rows = [(t,) for t in dict.fromkeys(texts)] + [(None,)]
+    df = spark.createDataFrame(rows, "text string").select(
+        "text",
+        contains_any(["text"], kws).alias("trie"),
+        F.lower("text").rlike(substring_any_pattern(kws)).alias("flat"),
+    )
+    for r in df.collect():
+        want = None if r.text is None else naive_substring(r.text, kws)
+        assert r.trie == r.flat == want, (kws, r)
+
+
+def _top_level_branches(pattern: str) -> int:
+    depth, branches, i = 0, 1, 0
+    while i < len(pattern):
+        ch = pattern[i]
+        if ch == "\\":
+            i += 1
+        elif ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif ch == "|" and depth == 0:
+            branches += 1
+        i += 1
+    return branches
+
+
+def test_contains_any_factors_the_shared_prefix(spark):
+    """200 keywords sharing `kw0` compile to one top-level branch; the
+    flat alternation the DuckDB oracles embed stays a plain join."""
+    kws = [f"kw{i:04d}x" for i in range(200)]
+    pattern = re.search(
+        r"rlike\(lower\(text\), '(.+)'\)", str(contains_any(["text"], kws))
+    ).group(1)
+    assert pattern.startswith("kw0(?:")
+    assert _top_level_branches(pattern) == 1
+    assert substring_any_pattern(kws) == "|".join(kws)
 
 
 def test_hyphen_variant_expansion():

@@ -50,6 +50,26 @@ def test_extract_submissions(spark, ndjson_file):
     assert bad.count() == 3
 
 
+def test_bad_rows_come_from_one_scan(spark, ndjson_file):
+    """The bad side is one filter over the parsed input (corrupt JSON OR
+    an unparseable created_utc), not a union that decompresses and
+    parses the input twice."""
+    _, bad = extract_submissions(spark, ndjson_file, ["dataeng"], ["spark"])
+    plan = bad._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan text") == 1, plan
+    assert bad.columns == [
+        "title", "selftext", "author", "subreddit", "created_utc",
+        "permalink", "_corrupt_record",
+    ]
+    # corrupt lines keep their raw text; a parsed row with no
+    # created_utc carries itself re-serialized as JSON
+    got = sorted((r.author or "", r._corrupt_record) for r in bad.collect())
+    assert got == sorted(
+        [("", line) for line in BAD_LINES]
+        + [("a5", json.dumps(GOOD[4], separators=(",", ":")))]
+    )
+
+
 def test_extract_comments(spark, tmp_path):
     recs = [
         {"body": "I love Spark", "author": "c1", "subreddit": "dataeng",
