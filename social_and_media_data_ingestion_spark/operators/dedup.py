@@ -29,13 +29,16 @@ Scale notes:
 
 from __future__ import annotations
 
+import logging
 import warnings
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types
 
 from social_and_media_data_ingestion_spark.session import pin
+
+_log = logging.getLogger(__name__)
 
 # 32-bit-safe universal-hash parameters (P is a Mersenne prime 2^31-1).
 _P = 2147483647
@@ -485,26 +488,29 @@ def connected_components(
     exhausted first, a warning is logged and the (possibly split) labels
     are returned — raise max_iter for graphs of diameter > max_iter.
 
-    Per-iteration shape (r14 opt round): ONE join + ONE aggregate. The
-    doubled edge set carries a SELF-LOOP per node, so the neighbor-min
-    aggregate folds the node's own label in for free, and the old
-    left-join of labels against the neighbor mins disappears; the
-    convergence probe rides the same aggregate (old label = the
-    self-loop's contribution, `min(when(t == s))`), replacing the
-    pre-r14 third join (new labels against old labels) with a map-only
-    filter over the already-pinned frame. 3 joins/round -> 1. The
-    labels side of the surviving join is SHUFFLE_HASH-hinted: both
-    sides are pinned ExistingRDD scans with no stats, so the static
-    planner would otherwise SortMergeJoin every round (two sorts of
-    the edge set per iteration) and AQE never revisits pinned
-    segments; the build side is the label frame — node-scale, the
-    smaller side by construction (|V| vs |2E + V|).
+    Per-round shape: the first round needs no join, because every
+    initial label is the node's own id: a node's new label is
+    `least(s, min(t))` over the doubled edge set, one aggregate. Each
+    later round is ONE join + ONE aggregate. Its probe side carries a
+    SELF-LOOP per node, so the neighbor-min aggregate folds the node's
+    own label in for free, and the same aggregate yields the old label
+    (the self-loop's contribution, `min(when(t == s))`). The labels side
+    of the join is SHUFFLE_HASH-hinted: both sides are pinned
+    ExistingRDD scans with no stats, so the static planner would
+    otherwise SortMergeJoin every round (two sorts of the edge set per
+    round) and AQE never revisits pinned segments; the build side is
+    the label frame — node-scale, the smaller side by construction
+    (|V| vs |2E + V|).
 
-    Lineage: the projected input edges, the initial labels and every
-    round's labels are eager :func:`session.pin` pins, so the caller's
-    edge lineage runs once and the checkpoint medium follows the
-    deployment. The doubled edge set is a union over the pinned edges,
-    with duplicates kept.
+    Convergence: each round's frame counts the nodes whose label moved
+    with an `observe()` metric that the round's eager pin computes in
+    its own job, so no second job probes for change. The number of
+    rounds and the moved count of each are logged at INFO.
+
+    Lineage: the projected input edges and every round's labels are
+    eager :func:`session.pin` pins, so the caller's edge lineage runs
+    once and the checkpoint medium follows the deployment. The doubled
+    edge set is a union over the pinned edges, with duplicates kept.
 
     Edges with a NULL `src` or `dst` are dropped at entry: a NULL
     endpoint names no node, so it joins no component and never appears
@@ -534,7 +540,7 @@ def connected_components(
         return F.col(c).cast("string") if to_string else F.col(c)
 
     # materialize the edge set ONCE, FIRST, and derive everything else
-    # from the pinned blocks: it is joined every round, and the
+    # from the pinned blocks: it is read every round, and the
     # caller's edge lineage (LSH candidates -> Jaccard verify ->
     # shingle scans) would otherwise re-execute per iteration x per
     # action — measured 8.5 s for a 193-edge graph at sf0.1, ~1 s with
@@ -548,49 +554,59 @@ def connected_components(
     doubled = pinned.union(
         pinned.select(F.col("t").alias("s"), F.col("s").alias("t"))
     )
-    labels = pin(
-        doubled.select("s")
-        .distinct()
-        .select(F.col("s").alias("id"), F.col("s").alias("label")),
-        eager=True,
-    )
-    # self-loops: each node's own label reaches the neighbor-min
-    # aggregate through the same join — no separate labels left-join.
-    # The self-loop side is the PINNED initial label frame (the node
-    # set), so `bi` itself stays unpinned: every iteration reads it as
-    # a map-side union of pinned block sets — no shuffle, no
-    # re-derivation, and no dedup needed (a duplicate self-loop from a
-    # (x, x) input edge only feeds the same value to min() twice)
-    init = labels
-    bi = doubled.union(
-        init.select(F.col("id").alias("s"), F.col("id").alias("t"))
-    )
-    converged = False
+    moved: list[int] = []
     for _ in range(max_iter):
-        stepped = pin(
-            bi.join(
-                labels.hint("shuffle_hash").select(
-                    F.col("id").alias("t"), F.col("label").alias("t_label")
-                ),
-                "t",
+        if not moved:
+            step = doubled.groupBy("s").agg(
+                F.least(F.col("s"), F.min("t")).alias("label"),
+                F.col("s").alias("__old"),
             )
-            .groupBy("s")
-            .agg(
-                F.min("t_label").alias("label"),
-                # the self-loop's contribution IS the node's old label —
-                # the convergence probe needs no second join
-                F.min(
-                    F.when(F.col("t") == F.col("s"), F.col("t_label"))
-                ).alias("__old"),
+        else:
+            step = (
+                bi.join(
+                    labels.hint("shuffle_hash").select(
+                        F.col("id").alias("t"), F.col("label").alias("t_label")
+                    ),
+                    "t",
+                )
+                .groupBy("s")
+                .agg(
+                    F.min("t_label").alias("label"),
+                    F.min(
+                        F.when(F.col("t") == F.col("s"), F.col("t_label"))
+                    ).alias("__old"),
+                )
+            )
+        seen = Observation()
+        stepped = pin(
+            step.observe(
+                seen,
+                F.count(F.when(F.col("label") != F.col("__old"), 1)).alias("moved"),
             ),
             eager=True,
         )
-        # map-only filter over the pinned blocks (no join, no shuffle)
-        done = stepped.filter(F.col("label") != F.col("__old")).isEmpty()
+        moved.append(seen.get["moved"])
         labels = stepped.select(F.col("s").alias("id"), "label")
-        if done:
-            converged = True
+        if len(moved) == 1:
+            # self-loops from the first round's pinned node set: `bi`
+            # stays an unpinned map-side union of pinned block sets (a
+            # duplicate self-loop from an (x, x) input edge only feeds
+            # the same value to min() twice)
+            bi = doubled.union(stepped.select("s", F.col("s").alias("t")))
+        if moved[-1] == 0:
             break
+    if not moved:  # max_iter < 1: no round ran, every node is alone
+        labels = doubled.select(
+            F.col("s").alias("id"), F.col("s").alias("label")
+        ).distinct()
+    converged = bool(moved) and moved[-1] == 0
+    _log.info(
+        "connected_components: %d round(s), converged=%s, "
+        "labels moved per round: %s",
+        len(moved),
+        converged,
+        moved,
+    )
     if not converged:
         warnings.warn(
             f"connected_components exhausted max_iter={max_iter} without "

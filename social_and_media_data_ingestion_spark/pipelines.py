@@ -9,7 +9,7 @@ chain is ONE Catalyst plan per output and stages fuse where possible):
       -> exact dedup         (rolling-fingerprint keep-first)
       -> near-dup dedup      (LSH candidates -> Jaccard verify ->
                               connected components -> canonical selection)
-      -> decontamination     (drop docs sharing bigram shingles with the
+      -> decontamination     (drop docs sharing word-3-gram shingles with the
                               eval split beyond a threshold)
       -> packed contexts / temperature weights (downstream feeders)
 
@@ -42,11 +42,50 @@ def quality_gate(
     max_punct_ratio: float = 0.2,
 ) -> DataFrame:
     """Keep documents that pass lang-ID, token-length, and punctuation
-    gates. Pure map — filters fuse into the scan."""
+    gates. Pure map — filters fuse into the scan.
+
+    Keeps exactly the rows of `TA.language_id(text) == lang AND
+    TA.ws_token_count(text) BETWEEN min_tokens AND max_tokens AND
+    TA.punct_ratio(text) <= max_punct_ratio`, but tokenizes each
+    document once: one token array is let-bound as a lambda variable,
+    and both the length band and the language test read it (the
+    spelled-out `language_id` re-splits the text per language and
+    references each hit count several times). `lang` wins the stopword
+    argmax when its hits are > 0, strictly above those of every
+    language listed before it in `TA.STOPWORDS` (the argmax breaks ties
+    by list order) and at least those of every language after it;
+    `"unk"` (language_id's default) wins when no token is a stopword."""
     return docs.filter(
-        (TA.language_id(text_col) == lang)
-        & TA.ws_token_count(text_col).cast("long").between(min_tokens, max_tokens)
+        F.expr(_gate_sql(text_col, lang, min_tokens, max_tokens))
         & (TA.punct_ratio(text_col) <= max_punct_ratio)
+    )
+
+
+def _gate_sql(text_col: str, lang: str, min_tokens: int, max_tokens: int) -> str:
+    """SQL of quality_gate's length band AND language test over one
+    let-bound token array `tk`."""
+
+    def words(langs) -> str:
+        return ", ".join(f"'{w}'" for lg in langs for w in TA.STOPWORDS[lg])
+
+    def hits(lg: str) -> str:
+        return f"size(filter(tk, w -> w IN ({words([lg])})))"
+
+    langs = list(TA.STOPWORDS)
+    if lang in langs:
+        i = langs.index(lang)
+        conds = ["h > 0"]
+        conds += [f"{hits(lg)} < h" for lg in langs[:i]]
+        conds += [f"{hits(lg)} <= h" for lg in langs[i + 1:]]
+        # `lang`'s hit count let-bound as `h`, read by every comparison
+        wins = f"transform(array({hits(lang)}), h -> {' AND '.join(conds)})[0]"
+    elif lang == "unk":
+        wins = f"NOT exists(tk, w -> w IN ({words(langs)}))"
+    else:
+        wins = "false"
+    return (
+        f"transform(array({D._sql_tokens(text_col)}), tk -> "
+        f"size(tk) BETWEEN {min_tokens} AND {max_tokens} AND {wins})[0]"
     )
 
 
@@ -72,7 +111,10 @@ def near_dedup(
 ) -> DataFrame:
     """Near-dup removal: LSH candidates -> exact Jaccard verify ->
     connected components -> keep the canonical member per cluster
-    (max keep_col, id tie-break). Docs in no cluster survive as-is.
+    (max keep_col, NULL lowest, id tie-break). Docs in no cluster
+    survive as-is. The canonical pick is one window over the cluster
+    members, `first(id) OVER (PARTITION BY cluster_id ORDER BY keep DESC
+    NULLS LAST, id)`; every member whose id differs is dropped.
 
     shingle_n=3 (word 3-grams) is load-bearing at scale: unigram
     shingles give unrelated docs high background Jaccard, so minhash
@@ -87,17 +129,22 @@ def near_dedup(
         docs, id_col, text_col, n=shingle_n, threshold=threshold, candidates=cand
     )
     clusters = D.connected_components(edges)
-    member = clusters.join(
-        docs.select(F.col(id_col).alias("id"), F.col(keep_col).alias("__keep")),
-        "id",
+    # the canonical id is the first member by (keep desc, id); comparing
+    # ids, not row numbers, keeps every row of a duplicate-PK canonical
+    first = F.first("id").over(
+        Window.partitionBy("cluster_id").orderBy(
+            F.col("__keep").desc_nulls_last(), "id"
+        )
     )
-    best = F.max(F.struct(F.col("__keep"), (-F.col("id")).alias("neg_id")))
-    canon = member.groupBy("cluster_id").agg(
-        (-best.getField("neg_id")).alias("canonical_id")
+    drop = (
+        clusters.join(
+            docs.select(F.col(id_col).alias("id"), F.col(keep_col).alias("__keep")),
+            "id",
+        )
+        .withColumn("__canon", first)
+        .filter(F.col("id") != F.col("__canon"))
+        .select(F.col("id").alias(id_col))
     )
-    drop = member.join(
-        canon, member.id == canon.canonical_id, "left_anti"
-    ).select(F.col("id").alias(id_col))
     return docs.join(drop, id_col, "left_anti")
 
 
@@ -115,36 +162,28 @@ def decontaminate(
     enough eval split covers the entire bigram space, flagging EVERY
     training doc as contaminated — longer shingles keep the overlap
     signal tied to actual shared passages (the reason production
-    decontamination sweeps use 8-13-gram windows)."""
+    decontamination sweeps use 8-13-gram windows).
 
-    def shingle_set(df: DataFrame, with_id: bool) -> DataFrame:
-        # token array let-bound as lambda var tk — evaluated once per
-        # row, not once per shingle (see dedup._sql_shingles)
-        arr = (
-            rf"flatten(transform(array(filter(split(lower(trim({text_col})),"
-            r" '\\s+'), x -> x != '')), tk -> "
-            "CASE WHEN size(tk) >= 3 THEN "
-            "transform(sequence(1, size(tk) - 2), "
-            "i -> concat(element_at(tk, i), ' ', element_at(tk, i+1), "
-            "' ', element_at(tk, i+2))) "
-            "ELSE CAST(array() AS ARRAY<STRING>) END))"
-        )
-        cols = [F.col(id_col)] if with_id else []
+    One aggregation: each training row's distinct shingles are exploded
+    once and left-joined to the broadcast distinct eval shingles, which
+    carry a marker column; `groupBy(id)` then counts all shingles (n)
+    and the marked ones (h) together, and a doc is contaminated when
+    h > 0 and h / n > max_overlap. Rows sharing an id pool their counts.
+    A doc with no shingle (fewer than 3 tokens) is never dropped."""
+
+    def shingles(df: DataFrame, *cols) -> DataFrame:
         return df.select(
-            *cols, F.explode(F.array_distinct(F.expr(arr))).alias("shingle")
+            *cols,
+            F.explode(F.array_distinct(D._shingle_array(text_col, 3))).alias("shingle"),
         )
 
-    tr = shingle_set(docs, with_id=True)
-    ev = shingle_set(eval_docs, with_id=False).distinct()
-    tot = tr.groupBy(id_col).agg(F.count("*").alias("__n"))
-    hit = (
-        tr.join(F.broadcast(ev), "shingle")
-        .groupBy(id_col)
-        .agg(F.count("*").alias("__h"))
-    )
+    ev = shingles(eval_docs).distinct().withColumn("__hit", F.lit(1))
     contaminated = (
-        tot.join(hit, id_col)
-        .filter(F.col("__h") / F.col("__n") > max_overlap)
+        shingles(docs, id_col)
+        .join(F.broadcast(ev), "shingle", "left")
+        .groupBy(id_col)
+        .agg(F.count("*").alias("__n"), F.count("__hit").alias("__h"))
+        .filter((F.col("__h") > 0) & (F.col("__h") / F.col("__n") > max_overlap))
         .select(id_col)
     )
     return docs.join(contaminated, id_col, "left_anti")

@@ -48,12 +48,15 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     The reliable path must not compute the frame twice. A bare lazy
     ``checkpoint`` does: the first action computes the frame, then Spark
     runs a second job that recomputes the lineage to write the files.
-    So the reliable checkpoint is stacked on a lazy local pin: the first
-    action fills the local pin's blocks, and the write job that follows
-    reads them (an eager pin, too, computes the frame once). Spark
-    completes only the outermost marked checkpoint, so the inner pin
-    keeps its lineage, and a block lost before the write is recomputed
-    rather than fatal.
+    So the reliable checkpoint is stacked on a local pin of the same
+    eagerness. A lazy pin's first action fills the local pin's blocks,
+    and the write job that follows reads them; Spark completes only the
+    outermost marked checkpoint, so the inner pin keeps its lineage, and
+    a block lost before the write is recomputed rather than fatal. An
+    eager pin computes the frame in the local pin's own job and the
+    write job reads its blocks: so an ``observe()`` metric on the frame
+    holds the real value once the pin returns. Under a lazy inner pin
+    the metric would be posted, empty, before any job ran.
 
     Cleanup: local pin blocks are freed once the frame is dereferenced.
     Reliable checkpoint files are not deleted unless
@@ -63,7 +66,7 @@ def pin(df: DataFrame, eager: bool = False) -> DataFrame:
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is None:
         return df.localCheckpoint(eager)
-    return df.localCheckpoint(eager=False).checkpoint(eager)
+    return df.localCheckpoint(eager).checkpoint(eager)
 
 
 def _default_driver_memory() -> str:

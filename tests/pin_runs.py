@@ -38,6 +38,16 @@ def rows(df) -> list:
     return sorted(json.loads(json.dumps([list(r) for r in df.collect()])))
 
 
+def frame(spark, data: list, schema: str):
+    """A small local frame built through Arrow. Built from a list of
+    rows, every read of it would run one Python worker task per slice
+    of the default parallelism."""
+    import pandas as pd
+
+    names = [f.split()[0] for f in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(data, columns=names, dtype=object), schema)
+
+
 def tally_udf(spark, return_type: str):
     """(identity UDF, accumulator): the accumulator counts the rows the
     UDF computes. The UDF is nondeterministic, so the optimizer neither
@@ -75,9 +85,29 @@ def lazy_pin_computes(spark) -> int:
     return calls.value
 
 
+def eager_pin_observed(spark) -> dict:
+    """The `observe()` metrics of an eagerly pinned frame, read right
+    after the pin returns: the pin's own job must have filled them."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from social_and_media_data_ingestion_spark.session import pin
+
+    seen = Observation()
+    df = (
+        spark.range(100, numPartitions=4)
+        .groupBy((F.col("id") % 10).alias("k"))
+        .agg(F.sum("id").alias("s"))
+        .observe(seen, F.count(F.lit(1)).alias("n"), F.sum("s").alias("total"))
+    )
+    pin(df, eager=True)
+    return seen.get
+
+
 def results(spark, reg) -> dict:
     """CC and PageRank (eager pins) plus a registry query whose BFS hops
-    are lazy pins, and the lazy pin's compute count."""
+    are lazy pins, the lazy pin's compute count, and the metrics an
+    eager pin observes."""
     from social_and_media_data_ingestion_spark.operators.dedup import (
         connected_components,
     )
@@ -95,6 +125,7 @@ def results(spark, reg) -> dict:
         "pagerank": rows(pagerank(pr_edges, iters=4)),
         "bfs": rows(reg["graph_bfs_reachability"].spark(spark, SF)),
         "lazy_pin_computes": lazy_pin_computes(spark),
+        "eager_pin_observed": eager_pin_observed(spark),
     }
 
 

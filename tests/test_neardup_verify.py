@@ -2,13 +2,19 @@
 
 `ngram_jaccard_pairs(candidates=...)` verifies the candidate pairs only,
 with the same answer as the inverted-index path semi-joined to the same
-candidates; `connected_components` runs its caller's edge lineage once;
-and `pipelines.near_dedup` stays within a build-job budget.
+candidates; `connected_components` runs its caller's edge lineage once,
+logs its rounds and handles empty, self-loop-only and too-long inputs;
+and `pipelines.near_dedup` stays within its build- and collect-job
+budgets.
 """
 
 from __future__ import annotations
 
+import logging
+import warnings
+
 import pytest
+from pyspark.sql import functions as F
 
 import pin_runs
 from social_and_media_data_ingestion_spark.operators.dedup import (
@@ -94,12 +100,15 @@ def test_connected_components_runs_edge_lineage_once(spark):
     assert calls.value == 5
 
 
-# Build jobs of `near_dedup` on the fixture below (connected components
-# runs at build time, behind eager pins): 20, the same on 2 and 4 cores.
-# Verifying candidates through the whole inverted shingle index and
-# running the edge lineage once per direction of the doubled edge set
-# took 24-25.
-_NEAR_DEDUP_BUILD_JOBS = 20
+# Jobs of `near_dedup` on the fixture below, the same on 2, 4 and 32 cores.
+# Build (connected components runs at build time, behind eager pins):
+# 14. A separate label-init pin, a join in the first round and a
+# convergence job per round took 20; verifying candidates through the
+# whole inverted shingle index and running the edge lineage once per
+# direction of the doubled edge set took 24-25. Collect: 7; a groupBy
+# of the canonical ids anti-joined to the members took 10.
+_NEAR_DEDUP_BUILD_JOBS = 14
+_NEAR_DEDUP_COLLECT_JOBS = 7
 
 
 def test_near_dedup_build_job_budget(spark):
@@ -114,13 +123,88 @@ def test_near_dedup_build_job_budget(spark):
     docs = spark.createDataFrame(rows, "doc_id bigint, text string, n_chars int")
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    group = "near-dedup-build-budget"
-    sc.setJobGroup(group, "near_dedup build")
+    jobs = {}
     try:
+        sc.setJobGroup("near-dedup-build-budget", "near_dedup build")
         out = near_dedup(docs, threshold=0.75)
-        jobs = len(tracker.getJobIdsForGroup(group))
+        jobs["build"] = len(tracker.getJobIdsForGroup("near-dedup-build-budget"))
+        sc.setJobGroup("near-dedup-collect-budget", "near_dedup collect")
+        got = sorted(r.doc_id for r in out.collect())
+        jobs["collect"] = len(tracker.getJobIdsForGroup("near-dedup-collect-budget"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert sorted(r.doc_id for r in out.collect()) == [2, 12, 22, 32, 99]
-    assert 0 < jobs <= _NEAR_DEDUP_BUILD_JOBS, jobs
+    assert got == [2, 12, 22, 32, 99]
+    assert 0 < jobs["build"] <= _NEAR_DEDUP_BUILD_JOBS, jobs
+    assert 0 < jobs["collect"] <= _NEAR_DEDUP_COLLECT_JOBS, jobs
+
+
+def _cc(spark, edges, kind="bigint", max_iter=30):
+    df = pin_runs.frame(spark, edges, f"id_a {kind}, id_b {kind}")
+    return connected_components(df, max_iter=max_iter)
+
+
+def _cc_log(caplog) -> list[str]:
+    return [
+        r.getMessage()
+        for r in caplog.records
+        if r.name.endswith("operators.dedup") and r.levelno == logging.INFO
+    ]
+
+
+def test_connected_components_logs_rounds(spark, caplog):
+    """A 5-node chain takes 5 rounds; the moved count of each round is
+    logged (the last round moves nothing: the convergence test)."""
+    caplog.set_level(logging.INFO, logger="social_and_media_data_ingestion_spark")
+    got = pin_runs.rows(_cc(spark, [(i, i + 1) for i in range(1, 5)]))
+    assert got == [[i, 1] for i in range(1, 6)]
+    assert _cc_log(caplog) == [
+        "connected_components: 5 round(s), converged=True, "
+        "labels moved per round: [4, 3, 2, 1, 0]"
+    ]
+
+
+def test_connected_components_empty_edges(spark, caplog):
+    caplog.set_level(logging.INFO, logger="social_and_media_data_ingestion_spark")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        out = connected_components(
+            spark.range(0).select(F.col("id").alias("id_a"), F.col("id").alias("id_b"))
+        )
+        assert out.collect() == []
+    assert out.schema.simpleString() == "struct<id:bigint,cluster_id:bigint>"
+    assert _cc_log(caplog) == [
+        "connected_components: 1 round(s), converged=True, "
+        "labels moved per round: [0]"
+    ]
+
+
+def test_connected_components_self_loops_converge_in_round_one(spark, caplog):
+    """Self-loops only: the join-free first round moves no label, so no
+    join round runs."""
+    caplog.set_level(logging.INFO, logger="social_and_media_data_ingestion_spark")
+    got = pin_runs.rows(_cc(spark, [("b", "b"), ("a", "a"), ("b", "b")], "string"))
+    assert got == [["a", "a"], ["b", "b"]]
+    assert _cc_log(caplog) == [
+        "connected_components: 1 round(s), converged=True, "
+        "labels moved per round: [0]"
+    ]
+
+
+@pytest.mark.parametrize(
+    "max_iter, want",
+    [
+        (0, [1, 2, 3, 4, 5, 6]),
+        (1, [1, 1, 2, 3, 4, 5]),
+        (2, [1, 1, 1, 2, 3, 4]),
+        (5, [1, 1, 1, 1, 1, 1]),
+    ],
+)
+def test_connected_components_path_longer_than_max_iter(spark, max_iter, want):
+    """A 6-node path needs 5 rounds to settle and a 6th to see it: with
+    fewer, the labels after max_iter rounds come back with the
+    non-convergence warning."""
+    edges = [(i, i + 1) for i in range(1, 6)]
+    with pytest.warns(RuntimeWarning, match=f"max_iter={max_iter} without"):
+        got = pin_runs.rows(_cc(spark, edges, max_iter=max_iter))
+    assert got == [[i, w] for i, w in enumerate(want, start=1)]

@@ -43,7 +43,8 @@ def test_only_session_pin_chooses_the_pin_medium():
 
 def test_reliable_checkpoint_dir_matches_local_pins(spark, reliable_pins):
     """With `spark.checkpoint.dir` set, every pin writes reliable
-    checkpoints there, and the results equal the local-pin results."""
+    checkpoints there, and the results equal the local-pin results; an
+    eager pin's `observe()` metrics hold the real values on both media."""
     from social_and_media_data_ingestion_spark.plans.queries import registry
 
     reliable, ck = reliable_pins
@@ -52,5 +53,6 @@ def test_reliable_checkpoint_dir_matches_local_pins(spark, reliable_pins):
     assert reliable == local
     assert local["bfs"] and local["cc"] and local["pagerank"]
     assert local["lazy_pin_computes"] == 10
+    assert local["eager_pin_observed"] == {"n": 10, "total": 4950}
     # reliable checkpoints land as rdd-<id> dirs under the configured dir
     assert any(p.name.startswith("rdd-") for p in ck.rglob("*") if p.is_dir())
