@@ -1,6 +1,6 @@
 """Benchmark harness: times the HEADLINE registry queries at
-$SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata) on
-local[$SPARK_GRAFT_CPUS].
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata) on `get_spark`'s
+local session (one core per usable CPU, or $SPARK_GRAFT_CPUS).
 
     python bench.py
     SPARK_GRAFT_SF_DIR=<testdata>/sf0.01 python bench.py

@@ -76,9 +76,9 @@ def pagerank(
     # recompute diamond parents unless persisted), so an unpinned edge
     # frame re-executes the caller's edge builder (e.g. the co-purchase
     # window over lineitem) ~3x per iteration — measured 28 s for 12
-    # iterations at sf0.1, ~3 s pinned. Same fix as triangle_count /
-    # connected_components; the pinned frames are edge- and node-scale,
-    # small next to the corpus that built them.
+    # iterations at sf0.1, ~3 s pinned. Same fix as connected_components;
+    # the pinned frames are edge- and node-scale, small next to the
+    # corpus that built them.
     e = pin(
         edges.select(F.col("src").alias("s"), F.col("dst").alias("t")), eager=True
     )
@@ -131,10 +131,26 @@ def pagerank(
     return pr.select(F.col("p_node").alias("node"), "pr")
 
 
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct (a, b) with a < b: the simple undirected graph of the
+    (src, dst) pairs, self-loops dropped, lazily pinned for its
+    several consumers."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .transform(pin)
+    )
+
+
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Global triangle count + wedge count + clustering coefficient of an
     UNDIRECTED simple graph given as (src, dst) pairs (any orientation,
-    self-loops and duplicates tolerated — canonicalized here).
+    self-loops and duplicates tolerated — canonicalized here), as one
+    lazy 1-row frame (n_triangles, n_wedges, clustering).
 
     Scale spelling: the degree-ordered edge iterator. Every edge is
     oriented from the lower-(degree, id)-ranked endpoint to the higher,
@@ -144,26 +160,22 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     standard distributed formulation (cf. Suri & Vassilvitskii, WWW'11,
     "Counting Triangles and the Curse of the Last Reducer") — with no
     quadratic hub blowup, unlike the naive undirected wedge join.
+
+    The triangle count and the wedge sum are two global aggregates
+    cross-joined into one row, computed by the caller's action. The
+    canonical edge set feeds three consumers (degrees, wedge join,
+    closing probe) and is pinned lazily, so the one plan reads it
+    instead of carrying the caller's edge derivation once per
+    reference. An edgeless graph gives (0, NULL, NULL), as SQL's SUM
+    over no rows does; a graph with no wedge gives a clustering of 0.0.
     """
-    # the canonical edge set feeds THREE consumers (degrees, wedge join,
-    # closing probe) across two actions — pin it so the caller's
-    # (possibly expensive) edge derivation runs once. LAZY pin
-    # (round-10 adjudication): a lazy pin persists at first
-    # materialization, so the second action still reads pinned blocks —
-    # the old eager=True bought nothing but a job at plan-construction
-    # time. The accepted trade: the first action's three consumers can
-    # benignly race-recompute a partition before it lands in the cache
-    # ("Block already exists" warnings), never a correctness issue on
-    # this deterministic distinct.
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .transform(pin)
-    )
+    # unpinned, graph_triangle_suppliers plans its lineitem self-join
+    # once per reference (13 times) and ran slower than the former two
+    # driver actions: median 2.9 -> 3.5 s at sf0.1 on 4 cores, 2.7 s
+    # pinned. The consumers can race to compute a pinned partition
+    # ("Block ... already exists" warnings): repeated work on a
+    # deterministic distinct, never a different answer.
+    e = _undirected(edges, src, dst)
     deg = (
         e.select(F.col("a").alias("n"))
         .unionAll(e.select(F.col("b").alias("n")))
@@ -191,29 +203,17 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     closing = e.select(
         F.least("a", "b").alias("x"), F.greatest("a", "b").alias("y")
     )
-    tri = wedges.join(closing, ["x", "y"]).count()
-    n_wedges = (
-        deg.select(F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long")).first()[0]
+    tri = wedges.join(closing, ["x", "y"]).agg(F.count("*").alias("n_triangles"))
+    n_wedges = deg.agg(
+        F.sum(F.col("d") * (F.col("d") - 1) / 2).cast("long").alias("n_wedges")
     )
-    spark = edges.sparkSession
-    schema = "n_triangles bigint, n_wedges bigint, clustering double"
-    if n_wedges is None:
-        # no nodes at all: SUM over the empty degree frame is NULL, and
-        # SQL engines agree the wedge count and the 3t/w ratio are NULL
-        # here, not 0 (r7 empty-tables probe)
-        return spark.createDataFrame([(int(tri), None, None)], schema)
-    clustering = 3.0 * tri / n_wedges if n_wedges else 0.0
-    import math
-
-    return spark.createDataFrame(
-        [
-            (
-                int(tri),
-                int(n_wedges),
-                math.floor(clustering * 1_000_000 + 0.5) / 1_000_000,
-            )
-        ],
-        schema,
+    t, w = F.col("n_triangles"), F.col("n_wedges")
+    return tri.crossJoin(n_wedges).select(
+        t,
+        w,
+        F.when(w == 0, 0.0)
+        .otherwise(F.floor(3.0 * t / w * 1_000_000 + 0.5) / 1_000_000)
+        .alias("clustering"),
     )
 
 
@@ -228,19 +228,14 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     edge set that only SHRINKS; each round's survivor frame is pinned
     so round r+1 reads materialized blocks instead of replaying rounds
     1..r (the same lineage-truncation trade as connected components in
-    operators/dedup.py). The per-round (n_nodes, n_edges) counts are
-    bounded driver scalars.
+    operators/dedup.py). Each round's stats row is a cross join of two
+    global counts over that round's frames, and the rows are unioned
+    into one lazy frame: the counts run in the caller's action, not
+    while building. `rounds=0` gives the empty frame of the same schema.
     """
-    e = (
-        edges.select(
-            F.least(F.col("src"), F.col("dst")).alias("a"),
-            F.greatest(F.col("src"), F.col("dst")).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .transform(pin)
-    )
-    stats: list[tuple[int, int, int]] = []
+    e = _undirected(edges, "src", "dst")
+    cols = ("round", "n_nodes", "n_edges")
+    stats = edges.sparkSession.range(0).select(*(F.col("id").alias(c) for c in cols))
     for r in range(1, rounds + 1):
         deg = (
             e.select(F.col("a").alias("n"))
@@ -255,8 +250,9 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
             .select("a", "b")
             .transform(pin)
         )
-        stats.append((r, keep.count(), e.count()))
-    spark = edges.sparkSession
-    return spark.createDataFrame(
-        stats, "round bigint, n_nodes bigint, n_edges bigint"
-    )
+        stats = stats.unionAll(
+            keep.agg(F.count("*").alias("n_nodes"))
+            .crossJoin(e.agg(F.count("*").alias("n_edges")))
+            .select(F.lit(r).cast("long").alias("round"), "n_nodes", "n_edges")
+        )
+    return stats

@@ -397,26 +397,10 @@ def events_decayed_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_triangle_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     from social_and_media_data_ingestion_spark.operators.graph import triangle_count
+    from social_and_media_data_ingestion_spark.plans.queries_ext5 import _partner_edges
 
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("v"))
-    pairs = (
-        a.join(b, "k")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("u").orderBy(F.desc("n"), F.asc("v"))
-    edges = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    )
-    return triangle_count(edges)
+    return triangle_count(_partner_edges(spark, sf_dir))
 
 
 # =============================================================================

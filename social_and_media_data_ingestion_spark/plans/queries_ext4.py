@@ -1297,9 +1297,8 @@ def orders_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_chi2_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the contingency table is the ONLY corpus-scale work in the query
     # — pin it (lazily; it's |types|×7 rows) so the two margins, the
-    # grand total, the cell join, AND the two dof .count() actions all
-    # read the pinned aggregate instead of re-scanning events once
-    # each (4 full-table reads at 100 TB before round 11)
+    # grand total, the cell join and the dof cardinalities all read the
+    # pinned aggregate instead of re-scanning events once each
     obs = (
         t(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofweek("ts").cast("bigint").alias("dow"))
@@ -1315,13 +1314,16 @@ def events_chi2_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n))
     )
     exp = F.col("r").cast("double") * F.col("c") / F.col("n")
+    # category cardinalities: count(*) over the margins, so a NULL
+    # event_type is a category and empty input gives (-1)*(-1) = 1
     dof = (
-        rt.count() - 1
-    ) * (ct.count() - 1)  # bounded driver state: category cardinalities
-    return cells.agg(
-        _r(F.sum(F.pow(F.col("o") - exp, 2) / exp), 6).alias("chi2_r"),
-        F.lit(dof).cast("bigint").alias("dof"),
+        rt.agg(F.count("*").alias("nr"))
+        .crossJoin(ct.agg(F.count("*").alias("nc")))
+        .select(((F.col("nr") - 1) * (F.col("nc") - 1)).alias("dof"))
     )
+    return cells.agg(
+        _r(F.sum(F.pow(F.col("o") - exp, 2) / exp), 6).alias("chi2_r")
+    ).crossJoin(F.broadcast(dof))
 
 
 # =============================================================================

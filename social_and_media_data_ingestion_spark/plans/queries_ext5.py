@@ -60,6 +60,8 @@ Scale notes (per query, also in SCALE.md):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1414,6 +1416,28 @@ _KCORE_EDGES = """
 """
 
 
+def _partner_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) supplier strong-partner edges, the Spark side of
+    `_KCORE_EDGES`: each supplier's top-3 order-co-occurrence partners,
+    ties to the lower id. Directed and not deduplicated; the graph
+    builders canonicalize to (least, greatest) themselves."""
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").distinct()
+    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("u"))
+    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("v"))
+    pairs = (
+        a.join(b, "k")
+        .filter(F.col("u") != F.col("v"))
+        .groupBy("u", "v")
+        .agg(F.count("*").alias("n"))
+    )
+    w = Window.partitionBy("u").orderBy(F.desc("n"), F.asc("v"))
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 3)
+        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
+    )
+
+
 def _kcore_round_sql(r: int, k: int) -> str:
     prev = f"e{r - 1}"
     return f"""
@@ -1451,22 +1475,7 @@ _KCORE_ROUNDS = 3
 def graph_kcore_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from social_and_media_data_ingestion_spark.operators.graph import kcore_peel
 
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("v"))
-    pairs = (
-        a.join(b, "k")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("u").orderBy(F.desc("n"), F.asc("v"))
-    edges = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
-    )
-    return kcore_peel(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS)
+    return kcore_peel(_partner_edges(spark, sf_dir), k=_KCORE_K, rounds=_KCORE_ROUNDS)
 
 
 # =============================================================================
@@ -2008,7 +2017,9 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bounded k-NN partner graph: per hop, the frontier expands via ONE
 # semi-join against the edge list and merges into the visited set
 # (union + distinct); visited is pinned per hop so hop h+1
-# never replays hops 1..h. Oracle: unrolled MATERIALIZED CTE hops.
+# never replays hops 1..h, and each hop's size is a 1-row aggregate
+# unioned into the returned plan (no driver count). Oracle: unrolled
+# MATERIALIZED CTE hops.
 # =============================================================================
 _BFS_SEEDS = (1, 2)
 _BFS_HOPS = 3
@@ -2044,28 +2055,14 @@ def _bfs_oracle() -> str:
 
 @q("graph_bfs_reachability", _bfs_oracle())
 def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("v"))
-    pairs = (
-        a.join(b, "k")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("u").orderBy(F.desc("n"), F.asc("v"))
     edges = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
+        _partner_edges(spark, sf_dir)
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .distinct()
         .transform(pin)
     )
-    spark_ = edges.sparkSession
-    reached = spark_.createDataFrame(
-        [(int(s),) for s in _BFS_SEEDS], "n bigint"
+    reached = spark.range(1).select(
+        F.explode(F.array(*(F.lit(s).cast("bigint") for s in _BFS_SEEDS))).alias("n")
     )
     stats = []
     for h in range(1, _BFS_HOPS + 1):
@@ -2076,8 +2073,12 @@ def graph_bfs_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
             reached.select(F.col("n").alias("b")), "b", "left_semi"
         ).select(F.col("a").alias("n"))
         reached = reached.union(fwd).union(bwd).distinct().transform(pin)
-        stats.append((h, reached.count()))
-    return spark_.createDataFrame(stats, "hop bigint, n_reached bigint")
+        stats.append(
+            reached.agg(F.count("*").alias("n_reached")).select(
+                F.lit(h).cast("bigint").alias("hop"), "n_reached"
+            )
+        )
+    return reduce(DataFrame.unionAll, stats)
 
 
 # =============================================================================

@@ -80,13 +80,29 @@ def _default_driver_memory() -> str:
     return f"{min(48 * 1024, half_mb)}m"
 
 
+def _usable_cpus() -> int:
+    """The CPUs this process may run on (its affinity mask), or the
+    machine's count where the platform has no affinity call."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "social_and_media_data_ingestion_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """The engine's session, ``local[n]`` with ``n`` shuffle partitions
+    unless given: ``n`` is ``SPARK_GRAFT_CPUS`` when set, else the CPUs
+    this process may use. ``extra_conf`` is applied last, over the
+    defaults below; a cluster deployment sets there what the local
+    defaults leave off, e.g. runtime bloom filters on big joins
+    (``spark.sql.optimizer.runtime.bloomFilter.enabled``: their build
+    stages cost ~6x at sf<=0.1)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
 
@@ -127,15 +143,6 @@ def get_spark(
         # convert in the loader (Spark timestamps are micros)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    # Runtime row-pruning for joins too big to broadcast: bloom filters
-    # built from the filtered dim side injected into the fact scan
-    # (Spark 3.3+). A clear win on a cluster at TB scale, but the extra
-    # build/probe stages dominate on small local data (measured ~6x
-    # slower at sf<=0.1), so it is opt-in via env rather than default.
-    if os.environ.get("SPARK_GRAFT_RUNTIME_FILTERS") == "1":
-        builder = builder.config(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled", "true"
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -6,11 +6,11 @@ pytest.ini deselects the `slow` whole-registry sweeps (differential fuzz
 and the robustness harnesses) from a plain `pytest tests/` run, so a
 green default run says nothing about them. This wrapper always runs with
 `-m "slow or not slow"`, placed last so that no `-m` among the extra
-arguments can narrow it, in the Tier-1 environment: one Spark core per
-CPU this process may use (OMP_NUM_THREADS is ignored) and Spark's
-scratch files under /tmp/spark-local. Extra arguments go to pytest
-before the marker; without any test path the whole `tests/` directory
-runs.
+arguments can narrow it, with Spark's scratch files under
+/tmp/spark-local as in the Tier-1 environment (`get_spark` already runs
+one Spark core per CPU this process may use). Extra arguments go to
+pytest before the marker; without any test path the whole `tests/`
+directory runs.
 
 Exit status is pytest's.
 """
@@ -38,7 +38,6 @@ def command(argv: list[str]) -> list[str]:
 
 
 def main(argv: list[str]) -> None:
-    os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
     os.environ["SPARK_LOCAL_DIRS"] = "/tmp/spark-local"
     os.chdir(ROOT)
     os.execv(sys.executable, command(argv))
