@@ -89,6 +89,21 @@ def _usable_cpus() -> int:
         return os.cpu_count() or 1
 
 
+# Spark's FileSystem-API streaming checkpoint manager; `get_spark` picks it
+# for local masters only.
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _is_local_master(master: str) -> bool:
+    """True for the one-machine masters: ``local``, ``local[n]``,
+    ``local[*]`` and ``local[n,f]``."""
+    return master.startswith("local")
+
+
 def get_spark(
     app_name: str = "social_and_media_data_ingestion_spark",
     master: str | None = None,
@@ -101,7 +116,25 @@ def get_spark(
     defaults below; a cluster deployment sets there what the local
     defaults leave off, e.g. runtime bloom filters on big joins
     (``spark.sql.optimizer.runtime.bloomFilter.enabled``: their build
-    stages cost ~6x at sf<=0.1)."""
+    stages cost ~6x at sf<=0.1).
+
+    When the session's master is local, stateful streams write their
+    checkpoints (offset and commit logs, state store files and their
+    checksum files, the file sink's ``_spark_metadata``) through Spark's
+    ``FileSystemBasedCheckpointFileManager`` instead of its FileContext
+    default, unless the caller's ``extra_conf`` or the running session
+    already names a manager. Without Hadoop's native library, the
+    FileContext manager's rename of each temp file into place calls
+    ``FileUtil.readLink``, which forks a ``readlink`` process two or more
+    times per file: about 830 forks in a five-batch pass of the
+    benchmark's dedup -> window -> parquet stream. On ``file:`` the two
+    managers rename alike: FileContext's
+    ``FileSystem.rename(src, dst, Rename)`` stats ``dst`` (the fork)
+    and then calls ``rename(src, dst)``; the FileSystem manager checks
+    ``exists(dst)`` and calls the same ``rename(src, dst)``. Both keep
+    Hadoop's ``.crc`` files and Spark's checkpoint checksums. Cluster
+    masters keep the FileContext manager, whose rename is atomic with
+    overwrite on HDFS."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_usable_cpus())
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
@@ -147,4 +180,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # The master actually running: getOrCreate may hand back an existing
+    # session started elsewhere.
+    if (
+        _is_local_master(spark.sparkContext.master)
+        and spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) is None
+    ):
+        spark.conf.set(_CHECKPOINT_MANAGER_CONF, _FS_CHECKPOINT_MANAGER)
     return spark

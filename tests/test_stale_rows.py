@@ -9,8 +9,9 @@ hash (ast.unparse normalizes them away).
 
 import ast
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 import stale_rows as S
 

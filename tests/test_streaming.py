@@ -1,10 +1,20 @@
 """Structured Streaming: file source -> watermark dedup / windowed agg ->
-memory sink; checkpointed parquet append with availableNow drain."""
+memory sink; checkpointed parquet append with availableNow drain; the
+benchmark's stateful chain across a kill and restart, and the processes
+its checkpointing forks."""
 
 from __future__ import annotations
 
 import datetime as dt
+import importlib.util
+import os
+import shutil
+from collections import Counter
+from contextlib import contextmanager
+from pathlib import Path
 
+import duckdb
+import numpy as np
 from pyspark.sql import types as T
 
 from social_and_media_data_ingestion_spark.streaming.pipeline import (
@@ -14,6 +24,8 @@ from social_and_media_data_ingestion_spark.streaming.pipeline import (
     run_to_memory,
     windowed_counts,
 )
+
+ROOT = Path(__file__).resolve().parents[1]
 
 SCHEMA = T.StructType(
     [
@@ -113,3 +125,149 @@ def test_stream_static_enrich(spark, tmp_path):
     finally:
         q.stop()
     assert rows == {"a": "engagement", "b": "ops", "c": None}
+
+
+# --- the benchmark's stateful chain: dedup -> window -> parquet ---------
+
+WINDOW_S, DELAY_S = 60, 120
+EVENTS = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+
+
+def _land_events(out: Path, n_files: int, seed: int) -> list[Path]:
+    """The benchmark's stream input (`perfbench/gen.gen_stream`), 250 rows
+    a file: duplicates and out-of-order rows land up to one file late."""
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_gen", ROOT / "perfbench" / "gen.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    gen.gen_stream(np.random.default_rng(seed), str(out), n_files, 250,
+                   file_span_s=WINDOW_S, max_shift_files=1)
+    return sorted((out / "landing").glob("*.parquet"))
+
+
+@contextmanager
+def _single_watermark(spark):
+    """Chaining dedup_within_watermark into windowed_counts defines a
+    second watermark on `ts`, which Spark 4 rejects unless stateful
+    operators share one global watermark."""
+    key = "spark.sql.streaming.statefulOperator.allowMultiple"
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.unset(key)
+
+
+def _drain_counts(spark, landing: Path, out: Path, ckpt: Path) -> None:
+    """One file per micro-batch through dedup -> window -> parquet, run
+    until the landed files are drained (availableNow)."""
+    src = (
+        spark.readStream.format("parquet").schema(EVENTS)
+        .option("maxFilesPerTrigger", 1).load(str(landing))
+    )
+    delay = f"{DELAY_S} seconds"
+    counts = windowed_counts(
+        dedup_within_watermark(src, "event_id", "ts", delay=delay),
+        "ts", window=f"{WINDOW_S} seconds", delay=delay,
+        group_cols=["event_type"],
+    )
+    q = append_to_parquet(counts, str(out), str(ckpt))
+    q.awaitTermination()
+    assert q.exception() is None
+
+
+def _emitted(con, out: Path) -> list[tuple]:
+    return con.execute(f"""
+        SELECT epoch_ms(window_start) AS w, event_type, n
+        FROM read_parquet('{out}/*.parquet') ORDER BY ALL""").fetchall()
+
+
+def _batch_answer(con, landing: Path) -> list[tuple]:
+    """DuckDB's batch answer for the stream (perfbench's StreamEvents.check):
+    distinct rows counted per window, for every window the final
+    watermark, max(ts) - delay, has passed."""
+    return con.execute(f"""
+        WITH d AS (SELECT DISTINCT event_id, ts, event_type
+                   FROM read_parquet('{landing}/*.parquet')),
+        b AS (SELECT epoch_ms(time_bucket(INTERVAL {WINDOW_S} SECONDS, ts)) AS w,
+                     event_type FROM d)
+        SELECT w, event_type, count(*) AS n FROM b
+        WHERE w + {WINDOW_S * 1000}
+              <= (SELECT epoch_ms(max(ts)) - {DELAY_S * 1000} FROM d)
+        GROUP BY w, event_type ORDER BY ALL""").fetchall()
+
+
+def test_stateful_chain_restarts_from_its_checkpoint(spark, tmp_path):
+    """Drain two of four files, then drop the last commit-log entry, as a
+    kill between a batch's output and its commit leaves it; land the
+    rest and restart on the same checkpoint. The restart replays that
+    batch and carries offsets, dedup state and window state over: the
+    output is the one-shot run's, no window is emitted twice, and both
+    equal DuckDB's batch answer."""
+    files = _land_events(tmp_path / "gen", 4, seed=11)
+    landing, out, ckpt = (tmp_path / d for d in ("landing", "out", "ckpt"))
+    landing.mkdir()
+    with _single_watermark(spark):
+        for f in files[:2]:  # copy2 keeps the mtimes that order the files
+            shutil.copy2(f, landing / f.name)
+        _drain_counts(spark, landing, out, ckpt)
+        last = max((ckpt / "commits").glob("[0-9]*"), key=lambda p: int(p.name))
+        last.unlink()
+        last.with_name(f".{last.name}.crc").unlink(missing_ok=True)
+        for f in files[2:]:
+            shutil.copy2(f, landing / f.name)
+        _drain_counts(spark, landing, out, ckpt)
+        _drain_counts(spark, files[0].parent, tmp_path / "one", tmp_path / "one_ck")
+
+    con = duckdb.connect()
+    try:
+        con.execute("SET TimeZone='UTC'")
+        restarted = _emitted(con, out)
+        one_shot = _emitted(con, tmp_path / "one")
+        want = _batch_answer(con, landing)
+    finally:
+        con.close()
+    assert want
+    assert len({(w, t) for w, t, _ in restarted}) == len(restarted)
+    assert restarted == one_shot == want
+
+
+def test_stateful_stream_forks_no_readlink(spark, tmp_path):
+    """A local session checkpoints without forking `readlink`.
+
+    Without Hadoop's native library, Spark's default FileContext
+    checkpoint manager forks `readlink` two or more times for every
+    checkpoint file it renames into place (over a thousand times for
+    this stream); the session's FileSystem-API manager forks none. A
+    JFR recording of the session JVM's process starts counts them."""
+    files = _land_events(tmp_path / "gen", 3, seed=5)
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        with _single_watermark(spark):
+            _drain_counts(spark, files[0].parent, tmp_path / "out", tmp_path / "ck")
+        # one spawn of our own shows the recording sees process starts
+        jvm.java.lang.ProcessBuilder(["true"]).start().waitFor()
+        rec.stop()
+        dump = jvm.java.io.File(str(tmp_path / "spawns.jfr")).toPath()
+        rec.dump(dump)
+    finally:
+        rec.close()
+    spawns = Counter(
+        os.path.basename(e.getString("command").split()[0])
+        for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    )
+    assert spawns["true"] == 1, spawns
+    assert spawns["readlink"] == 0, spawns
