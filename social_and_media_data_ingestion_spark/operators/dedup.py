@@ -122,16 +122,7 @@ def _polyhash(s):
 
 def _shingle_array(text_col: str, n: int):
     """Array of word n-grams (with multiplicity) of a text column —
-    evaluated row-local, never exploded.
-
-    The token array is BOUND AS A LAMBDA VARIABLE (`transform(array(
-    toks), tk -> ...)`) rather than referenced from inside the shingle
-    lambda: an outer-expression reference in a Catalyst higher-order
-    function is re-evaluated per element, which turned tokenization
-    into O(tokens x shingles) work per row — measured 5x slower at
-    sf0.1. A lambda variable is evaluated exactly once, and the whole
-    expression stays map-only whole-stage codegen (no shuffle, unlike
-    a window-lead spelling)."""
+    evaluated row-local, never exploded (see _sql_ngrams)."""
     if n == 1:
         return _tokens(text_col)
     return F.expr(_sql_shingles(text_col, n))
@@ -162,22 +153,29 @@ def _sql_tokens(text_col: str) -> str:
     )
 
 
-def _sql_shingles(text_col: str, n: int) -> str:
-    # token array bound as lambda var `tk` so it is evaluated ONCE per
-    # row — an outer reference inside the shingle lambda re-evaluates
-    # the tokenizer per element (O(tokens x shingles); see
-    # _shingle_array docstring). flatten(transform(array(x), v -> ...))
-    # is the standard SQL-level let-binding.
-    toks = _sql_tokens(text_col)
-    if n == 1:
-        return toks
+def _sql_ngrams(toks_sql: str, n: int) -> str:
+    """Word n-grams (n >= 2, with multiplicity, in order) of a token-array
+    SQL expression; an array shorter than n yields an empty array.
+
+    The token array is bound as lambda var `tk` (flatten(transform(
+    array(x), tk -> ...)) is the SQL-level let-binding) so it is
+    evaluated ONCE per row: an outer reference inside the n-gram lambda
+    is inlined by CollapseProject and re-evaluated per element, which
+    made tokenization O(tokens x n-grams) work per row — measured 5x
+    slower at sf0.1. The expression stays map-only whole-stage codegen
+    (no shuffle, unlike a window-lead spelling)."""
     return (
-        f"flatten(transform(array({toks}), tk -> "
+        f"flatten(transform(array({toks_sql}), tk -> "
         f"CASE WHEN size(tk) >= {n} THEN "
         f"transform(sequence(0, size(tk) - {n}), "
         f"i -> concat_ws(' ', slice(tk, i + 1, {n}))) "
         f"ELSE CAST(array() AS ARRAY<STRING>) END))"
     )
+
+
+def _sql_shingles(text_col: str, n: int) -> str:
+    toks = _sql_tokens(text_col)
+    return toks if n == 1 else _sql_ngrams(toks, n)
 
 
 def _sql_hash_id(s: str, hash_fn: str) -> str:
@@ -218,7 +216,7 @@ def minhash_signatures(
     # the hashed-shingle array is let-bound as lambda var `hh` so the
     # shingle+hash pipeline runs ONCE per row — repeating {hashed}
     # num_hashes times in the array would re-evaluate it per signature
-    # row (same CollapseProject/outer-ref pitfall as _sql_shingles)
+    # row (same CollapseProject/outer-ref pitfall as _sql_ngrams)
     hs = ",".join(
         f"array_min(transform(hh, x -> ({a} * x + {b}) % {_P}))"
         for a, b in _HASH_AB[:num_hashes]

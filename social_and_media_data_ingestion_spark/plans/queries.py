@@ -2204,9 +2204,4 @@ def registry() -> dict[str, QueryDef]:
         queries_tpch,
     )
 
-    from social_and_media_data_ingestion_spark.plans.priority import PRIORITY_HEAD
-
-    by_name = {d.name: d for d in REGISTRY}
-    head = [by_name[n] for n in PRIORITY_HEAD if n in by_name]
-    tail = [d for d in REGISTRY if d.name not in set(PRIORITY_HEAD)]
-    return {d.name: d for d in [*head, *tail]}
+    return {d.name: d for d in REGISTRY}

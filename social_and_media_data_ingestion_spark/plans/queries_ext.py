@@ -534,20 +534,12 @@ def explode_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_shingles_3gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    # whole computation over the token array in ONE let-binding (tk is
-    # a lambda var, so the tokenizer runs once per row — see
-    # dedup._sql_shingles), emitting the (n_shingles,
-    # n_distinct_shingles) pair as a struct
+    # the shingle array is let-bound as `sh` so both counts read one
+    # evaluation of it
     stats = (
-        r"transform(array(filter(split(lower(trim(text)), '\\s+'),"
-        r" x -> x != '')), tk -> struct("
-        "CAST(greatest(size(tk) - 2, 0) AS BIGINT) AS n_shingles, "
-        "CAST(size(array_distinct(CASE WHEN size(tk) >= 3 THEN "
-        "transform(sequence(1, size(tk) - 2), "
-        "i -> concat(element_at(tk, i), ' ', element_at(tk, i+1), "
-        "' ', element_at(tk, i+2))) "
-        "ELSE CAST(array() AS ARRAY<STRING>) END)) AS BIGINT) "
-        "AS n_distinct_shingles))[0]"
+        f"transform(array({D._sql_shingles('text', 3)}), sh -> struct("
+        "CAST(size(sh) AS BIGINT) AS n_shingles, "
+        "CAST(size(array_distinct(sh)) AS BIGINT) AS n_distinct_shingles))[0]"
     )
     return docs.select("doc_id", F.expr(stats).alias("s")).select(
         "doc_id", "s.n_shingles", "s.n_distinct_shingles"
@@ -964,11 +956,10 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     # token array let-bound as lambda var tk: the tokenizer is evaluated
     # once per row rather than once per chunk (CollapseProject inlines
-    # column refs into HOF lambdas — see dedup._sql_shingles); the
+    # column refs into HOF lambdas — see dedup._sql_ngrams); the
     # empty-doc guard keeps sequence() ascending
     chunk_arr = (
-        r"flatten(transform(array(filter(split(lower(trim(text)), '\\s+'),"
-        r" x -> x != '')), tk -> "
+        f"flatten(transform(array({D._sql_tokens('text')}), tk -> "
         "CASE WHEN size(tk) > 0 THEN "
         "transform(sequence(0, CAST(ceil(size(tk) / 40.0) AS INT) - 1), "
         "i -> concat_ws(' ', slice(tk, i * 40 + 1, 50))) "

@@ -79,7 +79,7 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantization into O(dim^2) work (array_min(ed) recomputed for
     # every code) — invisible at dim 64, a 100x penalty at dim 1024.
     # Lambda variables are values: inner lambdas referencing ed/p/codes
-    # pay O(1) per access. Same idiom as operators/dedup._sql_shingles.
+    # pay O(1) per access. Same idiom as operators/dedup._sql_ngrams.
     q_expr = """
     transform(array(transform(embedding, x -> CAST(x AS DOUBLE))), ed ->
       transform(array(struct(
@@ -340,20 +340,10 @@ _SHINGLES_SQL = (
 )
 def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    # token array let-bound as lambda var (evaluated once per row, not
-    # once per shingle — see text_bigram_logprob / dedup._sql_shingles)
-    shingle_arr = (
-        r"flatten(transform(array(filter(split(lower(trim(text)), '\\s+'),"
-        r" x -> x != '')), tk -> "
-        "CASE WHEN size(tk) >= 3 THEN transform(sequence(1, size(tk) - 2), "
-        "i -> concat(element_at(tk, i), ' ', element_at(tk, i+1), "
-        "' ', element_at(tk, i+2))) "
-        "ELSE CAST(array() AS ARRAY<STRING>) END))"
-    )
     sh = docs.select(
         "doc_id",
         "source",
-        F.explode(F.array_distinct(F.expr(shingle_arr))).alias("shingle"),
+        F.explode(F.array_distinct(D._shingle_array("text", 3))).alias("shingle"),
     )
     ev = sh.filter(F.col("source") == "src0").select(
         F.col("doc_id").alias("eval_id"), "shingle"
@@ -486,19 +476,9 @@ def sim_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    # token array LET-BOUND as a lambda variable (array(..) -> tk): an
-    # outer/column reference inside a higher-order-function lambda is
-    # inlined by CollapseProject and re-evaluated per element — the
-    # tokenizer ran O(tokens) times per bigram (measured 13 s at sf0.1;
-    # 0.6 s bound). Same fix as operators/dedup._sql_shingles.
-    bigram_arr = (
-        r"flatten(transform(array(filter(split(lower(trim(text)), '\\s+'),"
-        r" x -> x != '')), tk -> "
-        "CASE WHEN size(tk) >= 2 THEN transform(sequence(1, size(tk) - 1), "
-        "i -> concat(element_at(tk, i), ' ', element_at(tk, i+1))) "
-        "ELSE CAST(array() AS ARRAY<STRING>) END))"
+    bg = docs.select(
+        "doc_id", F.explode(D._shingle_array("text", 2)).alias("bigram")
     )
-    bg = docs.select("doc_id", F.explode(F.expr(bigram_arr)).alias("bigram"))
     # ONE corpus pass and ONE corpus-scale shuffle (round-11 scan
     # sharing): the bigram stream aggregates once to (doc_id, bigram)
     # postings, lazily pinned; the bigram count table derives from the
@@ -1048,17 +1028,9 @@ _BP_DF = 25
 )
 def text_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
-    # token array let-bound as lambda var (evaluated once per row, not
-    # once per bigram — see text_bigram_logprob / dedup._sql_shingles)
-    bigram_arr = (
-        r"flatten(transform(array(filter(split(lower(trim(text)), '\\s+'),"
-        r" x -> x != '')), tk -> "
-        "CASE WHEN size(tk) >= 2 THEN transform(sequence(1, size(tk) - 1), "
-        "i -> concat(element_at(tk, i), ' ', element_at(tk, i+1))) "
-        "ELSE CAST(array() AS ARRAY<STRING>) END))"
-    )
     sh = docs.select(
-        "doc_id", F.explode(F.array_distinct(F.expr(bigram_arr))).alias("shingle")
+        "doc_id",
+        F.explode(F.array_distinct(D._shingle_array("text", 2))).alias("shingle"),
     )
     df_ = sh.groupBy("shingle").agg(F.count("*").alias("doc_freq"))
     j = sh.join(df_, "shingle").select(

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from social_and_media_data_ingestion_spark.operators import dedup as D
 from social_and_media_data_ingestion_spark.operators.temporal_join import (
     asof_join,
     time_band_join,
@@ -661,7 +662,9 @@ def orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents").select(F.expr(_SPARK_TOKS).alias("toks"))
+    docs = t(spark, sf_dir, "documents").select(
+        F.expr(D._sql_tokens("text")).alias("toks")
+    )
     # ONE tokenize pass, ONE corpus-scale shuffle (round-11 scan
     # sharing): each row emits its unigrams AND bigrams as one tagged
     # gram stream, aggregated once to a vocabulary-scale (kind, gram)
@@ -673,13 +676,10 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |tokens| + |bigrams| rows, the same volume the two separate
     # aggregations shuffled.
     grams = F.expr(
-        """concat(
+        f"""concat(
       transform(toks, w -> named_struct('kind', 'u', 'g', w)),
-      CASE WHEN size(toks) >= 2 THEN
-        transform(sequence(1, size(toks) - 1),
-          i -> named_struct('kind', 'b', 'g',
-               concat(element_at(toks, i), ' ', element_at(toks, i + 1))))
-      ELSE CAST(array() AS ARRAY<STRUCT<kind: STRING, g: STRING>>) END)"""
+      transform({D._sql_ngrams("toks", 2)},
+        b -> named_struct('kind', 'b', 'g', b)))"""
     )
     gc = (
         docs.select(F.explode(grams).alias("kg"))
@@ -1075,22 +1075,6 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPARK_TOKS = r"filter(split(lower(trim(text)), '\\s+'), x -> x != '')"
-# `toks` is LET-BOUND as lambda var `tk` (flatten(transform(array(..))))
-# so the token column — which CollapseProject inlines as the full
-# tokenizer expression — is evaluated once per row, not once per n-gram
-# (see operators/dedup._sql_shingles for the measured 5x)
-_SPARK_BIGRAMS = (
-    "flatten(transform(array(toks), tk -> "
-    "transform(sequence(1, size(tk) - 1), "
-    "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))))"
-)
-_SPARK_TRIGRAMS = (
-    "flatten(transform(array(toks), tk -> "
-    "transform(sequence(1, size(tk) - 2), "
-    "i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1), ' ', "
-    "element_at(tk, i + 2)))))"
-)
 _DUCK_BIGRAMS = (
     "list_transform(range(1, len(toks)), "
     "i -> toks[i] || ' ' || toks[i + 1])"
@@ -1152,7 +1136,7 @@ _DUCK_TRIGRAMS = (
 )
 def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.expr(_SPARK_TOKS).alias("toks")
+        "doc_id", "source", F.expr(D._sql_tokens("text")).alias("toks")
     )
     base = docs.filter(F.size("toks") >= 3)
 
@@ -1174,19 +1158,19 @@ def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
                     IF(s.prev IS NOT NULL AND x = s.prev, s.run + 1L, 1L))),
           s -> s.best)"""
 
+    bigrams, trigrams = D._sql_ngrams("toks", 2), D._sql_ngrams("toks", 3)
     per_doc = base.select(
         "source",
         (
             F.expr(run_max("toks")).cast("double") / F.size("toks")
         ).alias("top_word_frac"),
         F.expr(
-            f"CAST({run_max(_SPARK_BIGRAMS)} AS DOUBLE)"
-            f" / size({_SPARK_BIGRAMS})"
+            f"CAST({run_max(bigrams)} AS DOUBLE) / size({bigrams})"
         ).alias("top_bigram_frac"),
         (
             F.lit(1.0)
-            - F.size(F.array_distinct(F.expr(_SPARK_TRIGRAMS))).cast("double")
-            / F.size(F.expr(_SPARK_TRIGRAMS))
+            - F.size(F.array_distinct(F.expr(trigrams))).cast("double")
+            / F.size(F.expr(trigrams))
         ).alias("dup_trigram_frac"),
     )
 

@@ -334,24 +334,10 @@ _PARTNER_EDGE_CTES = """
     """,
 )
 def graph_adamic_adar_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey").distinct()
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_suppkey").alias("v"))
-    pairs = (
-        a.join(b, "k")
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("n"))
-    )
-    w = Window.partitionBy("u").orderBy(F.desc("n"), F.asc("v"))
-    e = (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
-        )
-        .distinct()
-    )
+    from social_and_media_data_ingestion_spark.operators.graph import _undirected
+    from social_and_media_data_ingestion_spark.plans.queries_ext5 import _partner_edges
+
+    e = _undirected(_partner_edges(spark, sf_dir), "src", "dst")
     und = e.select(F.col("a").alias("w"), F.col("b").alias("x")).unionAll(
         e.select(F.col("b").alias("w"), F.col("a").alias("x"))
     )
@@ -1362,7 +1348,7 @@ def text_kwic_contexts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the match-position filter LET-BINDS toks as lambda var tk: an
     # outer column ref inside the filter lambda is inlined by
     # CollapseProject and re-evaluates the tokenizer per position —
-    # O(tokens^2) per document (see operators/dedup._sql_shingles).
+    # O(tokens^2) per document (see operators/dedup._sql_ngrams).
     # Positions come from an index-carrying transform over the array
     # itself, NOT sequence(1, size(tk)) + element_at: Spark's sequence
     # steps BACKWARD when start > stop, so an EMPTY token array (blank

@@ -37,10 +37,9 @@ import pytest
 
 from social_and_media_data_ingestion_spark.plans.queries import registry
 
-# Whole-registry sweep: minutes per test, deselected by default (see
-# pytest.ini). Run with -m "slow or not slow" after any closure edit
-# and before round close.
-pytestmark = pytest.mark.slow
+# The cross-engine sweeps take minutes per test and are marked slow,
+# deselected by default (see pytest.ini). Run with -m "slow or not slow"
+# after any closure edit and before round close.
 
 OTHER_TABLES = [
     "region",
@@ -72,9 +71,16 @@ def hostile_docs_dir(spark, tmp_path_factory):
         (3, nul, "de", "src1"),
         (4, ws, "en", "src0"),
         (5, "normal little document about alpha beta", "en", "src1"),
+        (6, None, "en", "src0"),
+        (7, "", "de", "src1"),
+        (8, "solo", "en", "src0"),
+        (9, "two words", "de", "src1"),
+        (10, "tab\tseparated\t\twords\there", "en", "src0"),
+        (11, "naïve café straße 東京 ümlaut", "de", "src1"),
+        (12, " ".join(["again"] * 500), "en", "src0"),
     ]
     pdf = pd.DataFrame(rows, columns=["doc_id", "text", "lang", "source"])
-    pdf["n_chars"] = pdf["text"].str.len().astype("int64")
+    pdf["n_chars"] = pdf["text"].str.len().astype("Int64")
     spark.createDataFrame(pdf).write.mode("overwrite").parquet(
         str(tmp / "documents.parquet")
     )
@@ -118,6 +124,40 @@ def _canon(df: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def test_ngram_helper_matches_the_element_at_spelling(spark, hostile_docs_dir):
+    """`dedup._sql_ngrams` against the element_at + concat n-gram
+    spelling the query builders used before they shared it."""
+    from pyspark.sql import functions as F
+
+    from social_and_media_data_ingestion_spark.operators.dedup import (
+        _sql_ngrams,
+        _sql_tokens,
+    )
+
+    docs = spark.read.parquet(f"{hostile_docs_dir}/documents.parquet").select(
+        "doc_id", F.expr(_sql_tokens("text")).alias("toks")
+    )
+    for n in (2, 3):
+        parts = ", ' ', ".join(f"element_at(toks, i + {j})" for j in range(n))
+        former = (
+            f"CASE WHEN size(toks) >= {n} THEN "
+            f"transform(sequence(1, size(toks) - {n - 1}), i -> concat({parts})) "
+            "ELSE CAST(array() AS ARRAY<STRING>) END"
+        )
+        rows = docs.select(
+            "doc_id",
+            F.expr(former).alias("former"),
+            F.expr(_sql_ngrams("toks", n)).alias("ngrams"),
+        ).collect()
+        assert len(rows) == 13
+        assert [r.doc_id for r in rows if r.former != r.ngrams] == []
+        sizes = {r.doc_id: len(r.ngrams) for r in rows}
+        assert sizes[0] == 40_000 - n + 1 and sizes[12] == 500 - n + 1
+        assert sizes[6] == sizes[7] == sizes[8] == 0
+        assert sizes[9] == (1 if n == 2 else 0)
+
+
+@pytest.mark.slow
 def test_every_documents_query_agrees_on_hostile_docs(
     spark, hostile_docs_dir
 ):
@@ -185,6 +225,7 @@ def pii_docs_dir(spark, tmp_path_factory):
     return str(tmp)
 
 
+@pytest.mark.slow
 def test_pii_redaction_match_paths_agree_cross_engine(spark, pii_docs_dir):
     """Java regex (Spark) vs RE2 (DuckDB) on text where the patterns
     actually FIRE: multiple matches per line, the RFC {1,64} boundary,

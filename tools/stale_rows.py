@@ -1,31 +1,29 @@
-"""Driver-row freshness ledger (round-5 verdict item 6, rewritten r7).
+"""Correctness-evidence freshness ledger.
 
-A driver row (CORRECTNESS_r{N}.json) is EVIDENCE for a query only while
-the code under the query is unchanged. Round 6 showed that file-commit-
-date granularity over-reports staleness ~10x (a PRIORITY_HEAD edit
-staled all 59 queries.py queries; an untracked artifact conferred no
-freshness at all). This rewrite compares CONTENT, not dates:
+A green oracle row is EVIDENCE for a query only while the code under it
+is unchanged, compared by CONTENT: a query's closure hash is sha256 over
+the ast.unparse'd source of its @q-decorated function (decorators
+included, so the DuckDB oracle SQL is in the hash), plus every top-level
+object it references transitively — same-module helpers and constants,
+and cross-module engine objects resolved through the package's imports
+(an unresolvable or module-level import pulls in the whole engine file).
+ast.unparse drops comments, so comment-only edits never stale anything.
 
-  For each query we compute a closure hash: sha256 over the
-  ast.unparse'd source of the @q-decorated function (decorators
-  included, so the DuckDB oracle SQL is in the hash), plus every
-  top-level object it references transitively — same-module helpers
-  and constants, and cross-module engine objects resolved through the
-  package's imports (an unresolvable or module-level import pulls in
-  the whole engine file). ast.unparse normalizes comments away, so
-  comment-only edits never stale anything.
+Evidence:
+  - Driver rows (CORRECTNESS_r*.json), hashed against the git snapshot
+    at the commit that last touched the artifact (an untracked or
+    locally modified artifact stands for the working tree). Green =
+    hash_match, or rows-only success (err is None and rows not
+    mismatched), or err == "no_oracle" with a non-zero row count.
+  - Local rows (LOCAL_EVIDENCE.json), one per (query, sf) under the
+    closure hash it ran against, written by tools/verify_local.py. They
+    are evidence for a hash only when sf0.001, sf0.01 and sf0.1 are all
+    green at that hash; a red run overwrites the green row.
 
-  The hash is computed twice: once from the working tree (current),
-  and once from the git snapshot at the commit that last touched each
-  CORRECTNESS_r*.json (the code the driver actually ran). An
-  UNTRACKED artifact is evidence for the working tree itself. A query
-  is FRESH if any green driver row's snapshot hash equals the current
-  hash; STALE if it has green rows but none match; NEVER if it has no
-  green row at all.
-
-  Green = hash_match, or rows-only success (err is None and rows not
-  mismatched), or the oracle-less rows-only path the driver records as
-  err == "no_oracle" with a row count (round-6 ADVICE item 1).
+FRESH: some evidence hash equals the current hash; STALE: evidence, but
+none matches; NEVER: no evidence. For each stale or never query the
+report names the SFs lacking a green local row at the current hash,
+then prints the verify_local commands that record them.
 
 Usage: python tools/stale_rows.py [--fail]
 Exit code 0 unless --fail is passed and a stale/never query exists.
@@ -44,6 +42,10 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "social_and_media_data_ingestion_spark"
 WORKTREE = "WORKTREE"
+LOCAL_EVIDENCE = "LOCAL_EVIDENCE.json"
+#: the SF directories (under TESTDATA) a local record must cover
+LOCAL_SFS = ("sf0.001", "sf0.01", "sf0.1")
+TESTDATA = "/root/testdata"
 
 
 def _git(*args: str) -> str:
@@ -266,27 +268,67 @@ def _green(row: dict) -> bool:
     # spark row count; that IS the strongest evidence such a query can
     # ever have (round-6 ADVICE item 1) — but a ZERO-row result proves
     # nothing (round-7 ADVICE: a silently-empty query must not count as
-    # verified; it re-enters the rotation instead)
+    # verified)
     if row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) > 0:
         return True
     return False
 
 
+def load_local() -> dict[str, dict[str, dict]]:
+    """query -> sf -> {"green": bool, "hash": str}; {} if no artifact."""
+    path = os.path.join(ROOT, LOCAL_EVIDENCE)
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def record_local(
+    results: list[tuple[str, str, bool]],
+    before: dict[str, str],
+    after: dict[str, str],
+) -> int:
+    """Write (query, sf, green) results into LOCAL_EVIDENCE.json, each
+    under the query's closure hash. `before` and `after` are the closure
+    hashes taken before and after the run: a query whose hash moved
+    while it ran is not written, since no one hash names the code it
+    ran. Rows of queries gone from the registry are dropped. Returns the
+    number of rows written."""
+    rows = {q: r for q, r in load_local().items() if q in after}
+    n = 0
+    for name, sf, green in results:
+        h = before.get(name)
+        if h is None or after.get(name) != h:
+            continue
+        rows.setdefault(name, {})[sf] = {"green": green, "hash": h}
+        n += 1
+    with open(os.path.join(ROOT, LOCAL_EVIDENCE), "w") as f:
+        json.dump(rows, f, indent=1, sort_keys=True)
+        f.write("\n")
+    return n
+
+
+def _missing_sfs(by_sf: dict, h: str) -> list[str]:
+    """SFs without a green local row at closure hash `h`."""
+    return [
+        sf
+        for sf in LOCAL_SFS
+        if not (by_sf.get(sf, {}).get("green") and by_sf[sf].get("hash") == h)
+    ]
+
+
 def ledger() -> dict:
     """Compute the freshness ledger for the working tree. Returns
     {"current": {query: hash}, "evidence": {query: set-of-hashes},
-    "newest_round": {query: int}, "stale": [query...] (oldest-evidence
-    first), "never": [query...]}. Shared by the CLI below and by the
-    suite's arming test (round-8 verdict item 1): pytest asserts every
-    stale/never row is scheduled in the driver-sampled head, so
-    staleness can never silently accumulate between rounds."""
+    "stale": [query...], "never": [query...],
+    "missing": {query: [sf...]}} where "missing" names, for each stale
+    or never query, the SFs lacking a green local row at its current
+    hash. Shared by the CLI below and by tests/test_stale_ledger.py,
+    which requires stale == never == [] at every commit."""
     current = closure_hashes(Snapshot(WORKTREE))
 
-    # evidence: query -> set of snapshot hashes with a green driver row;
-    # newest_round: query -> highest round number carrying a green row
-    # (the row's AGE — head rotation drains oldest-evidence first)
+    # evidence: query -> set of snapshot hashes with a green driver row
     evidence: dict[str, set[str]] = {}
-    newest_round: dict[str, int] = {}
     snap_hash_cache: dict[str, dict[str, str]] = {}
     for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rel = os.path.relpath(path, ROOT)
@@ -296,12 +338,18 @@ def ledger() -> dict:
                 current if ref == WORKTREE else closure_hashes(Snapshot(ref))
             )
         hashes = snap_hash_cache[ref]
-        rnd = int(os.path.basename(path)[len("CORRECTNESS_r") : -len(".json")])
         with open(path) as f:
             for name, row in json.load(f).items():
                 if _green(row) and name in hashes:
                     evidence.setdefault(name, set()).add(hashes[name])
-                    newest_round[name] = max(newest_round.get(name, 0), rnd)
+
+    # local rows: evidence for a hash only when every LOCAL_SFS row is
+    # green at that one hash
+    local = load_local()
+    for name, by_sf in local.items():
+        h = by_sf.get(LOCAL_SFS[0], {}).get("hash")
+        if h and not _missing_sfs(by_sf, h):
+            evidence.setdefault(name, set()).add(h)
 
     stale: list[str] = []
     never: list[str] = []
@@ -310,31 +358,35 @@ def ledger() -> dict:
             never.append(qname)
         elif current[qname] not in evidence[qname]:
             stale.append(qname)
-    # oldest newest-green-round first, then name, so `head -n` of the
-    # STALE block IS the rotation queue
-    stale.sort(key=lambda n: (newest_round[n], n))
     return {
         "current": current,
         "evidence": evidence,
-        "newest_round": newest_round,
         "stale": stale,
         "never": never,
+        "missing": {
+            n: _missing_sfs(local.get(n, {}), current[n]) for n in stale + never
+        },
     }
 
 
 def main() -> None:
     led = ledger()
     current, evidence = led["current"], led["evidence"]
-    stale, never, newest_round = led["stale"], led["never"], led["newest_round"]
+    stale, never, missing = led["stale"], led["never"], led["missing"]
 
     print(f"registry: {len(current)}")
-    print(f"with driver evidence: {len(evidence)}")
-    print(f"never sampled: {len(never)}")
-    for n in never:
-        print(f"  NEVER {n}")
-    print(f"stale (code changed since newest green driver row): {len(stale)}")
-    for n in stale:
-        print(f"  STALE r{newest_round[n]} {n}")
+    print(f"with evidence: {len(evidence)}")
+    # one verify_local run per set of missing SFs, not one per query:
+    # each run pays a Spark session start
+    runs: dict[tuple[str, ...], list[str]] = {}
+    for label, names in (("NEVER", never), ("STALE", stale)):
+        print(f"{label.lower()}: {len(names)}")
+        for n in names:
+            print(f"  {label} {n}  missing: {' '.join(missing[n])}")
+            runs.setdefault(tuple(missing[n]), []).append(n)
+    for sfs, names in runs.items():
+        dirs = " ".join(os.path.join(TESTDATA, sf) for sf in sfs)
+        print(f"record: python tools/verify_local.py {dirs} {' '.join(names)}")
     if "--fail" in sys.argv and (stale or never):
         sys.exit(1)
 
