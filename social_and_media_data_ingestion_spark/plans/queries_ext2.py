@@ -1257,19 +1257,18 @@ def window_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def orders_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The oracle uses three unpartitioned ntile windows; here the three
-    # quartiles come from ONE fused distributed-ntile pass (r13 opt
-    # round): the customer-grain table is union-tagged 3 ways (one tag
-    # per R/F/M sort key, every key order-embedded into a single LONG),
-    # range-partitioned ONCE on (tag, value DESC, custkey), and a
-    # map-only Arrow pass assigns each tag's exact global ntile bucket
-    # from per-(partition, tag) offset counts — the same bucket formula
-    # and total order as operators.scale.global_ntile, so the buckets
-    # are hash-identical. vs the previous 3 sequential global_ntile
-    # calls: ONE range shuffle of 3n skinny rows + one bounded collect
-    # instead of three range shuffles + three pid re-exchanges + three
-    # collects (guide §2.4); no single task ever sorts the whole table.
+    # quartiles come from ONE distributed rank (operators.scale
+    # _global_rank): the customer-grain table is union-tagged 3 ways (one
+    # tag per R/F/M sort key, every key order-embedded into a single
+    # LONG) and ranked ONCE on (tag, value DESC, custkey). Every tag holds
+    # the same n customer rows, so a row's rank within its tag is
+    # rn - (tag - 1) * n, and the global_ntile bucket formula over it
+    # gives each tag's exact quartile — same total order, hash-identical
+    # buckets. ONE range shuffle of 3n skinny rows + one bounded collect
+    # instead of three; no single task ever sorts the whole table.
     from social_and_media_data_ingestion_spark.operators.scale import (
-        _default_partitions,
+        _global_rank,
+        _ntile_bucket,
     )
 
     orders = t(spark, sf_dir, "orders")
@@ -1307,87 +1306,20 @@ def orders_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "m_cents",
         )
         tagged = part if tagged is None else tagged.unionAll(part)
-    sort_cols = [
-        F.asc("__tag"),
-        F.desc_nulls_last("__val"),
-        F.asc_nulls_last("o_custkey"),
-    ]
-    ranged = (
-        tagged.repartitionByRange(_default_partitions(spark), *sort_cols)
-        .sortWithinPartitions(*sort_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .transform(pin)
+    ranked, total = _global_rank(
+        tagged,
+        [
+            F.asc("__tag"),
+            F.desc_nulls_last("__val"),
+            F.asc_nulls_last("o_custkey"),
+        ],
+        "__rn",
     )
-    counts = ranged.groupBy("__pid", "__tag").count().collect()
-    # per-(pid, tag) global-rank offsets and the per-tag row count n —
-    # bounded O(partitions x 3) driver state
-    offsets: dict[tuple[int, int], int] = {}
-    n_per_tag: dict[int, int] = {}
-    for row in sorted(counts, key=lambda r: (r["__tag"], r["__pid"])):
-        offsets[(row["__pid"], row["__tag"])] = n_per_tag.get(row["__tag"], 0)
-        n_per_tag[row["__tag"]] = (
-            n_per_tag.get(row["__tag"], 0) + row["count"]
-        )
-    # standard SQL ntile split per tag (first n % k buckets get one
-    # extra row) — the global_ntile formula, precomputed driver-side
-    k = 4
-    params = {
-        tg: (divmod(n, k)) for tg, n in n_per_tag.items()
-    }  # tag -> (base, rem)
-    names_in = [f.name for f in ranged.schema.fields]
-    tag_i = names_in.index("__tag")
-    cust_i = names_in.index("o_custkey")
-    cents_i = names_in.index("m_cents")
-    pid_i = names_in.index("__pid")
-    cust_dt = ranged.schema["o_custkey"].dataType.simpleString()
-    out_schema = (
-        f"o_custkey {cust_dt}, m_cents bigint, __tag int, __bucket bigint"
+    n = total // 3
+    assigned = ranked.withColumn(
+        "__bucket",
+        _ntile_bucket(F.col("__rn") - (F.col("__tag") - 1) * n, n, 4),
     )
-
-    def _buckets(it):
-        import numpy as np
-        import pyarrow as pa
-
-        pos: dict[int, int] = {}  # tag -> next 0-based global rank
-        pid = None
-        for rb in it:
-            if rb.num_rows == 0:
-                continue
-            if pid is None:
-                pid = rb.column(pid_i)[0].as_py()
-            tg_arr = rb.column(tag_i).to_numpy(zero_copy_only=False)
-            ranks = np.empty(len(tg_arr), dtype=np.int64)
-            bounds = (
-                [0]
-                + (np.flatnonzero(np.diff(tg_arr)) + 1).tolist()
-                + [len(tg_arr)]
-            )
-            buckets = np.empty(len(tg_arr), dtype=np.int64)
-            for i0, i1 in zip(bounds[:-1], bounds[1:]):
-                tg = int(tg_arr[i0])
-                start = pos.get(tg, offsets.get((pid, tg), 0))
-                ranks[i0:i1] = np.arange(start + 1, start + 1 + (i1 - i0))
-                pos[tg] = start + (i1 - i0)
-                base, rem = params[tg]
-                cut = rem * (base + 1)
-                rk = ranks[i0:i1]
-                first = (rk - 1) // (base + 1) + 1
-                if base > 0:
-                    rest = (rk - 1 - cut) // base + rem + 1
-                    buckets[i0:i1] = np.where(rk <= cut, first, rest)
-                else:
-                    buckets[i0:i1] = first
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(cust_i),
-                    rb.column(cents_i),
-                    rb.column(tag_i),
-                    pa.array(buckets, type=pa.int64()),
-                ],
-                names=["o_custkey", "m_cents", "__tag", "__bucket"],
-            )
-
-    assigned = ranged.mapInArrow(_buckets, out_schema)
     # pivot the three tag rows back to one row per customer (NULL
     # custkey is a real group and groupBy keeps it); m_cents rides every
     # replica, so any aggregate of it per key returns the key's value

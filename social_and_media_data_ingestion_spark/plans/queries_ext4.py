@@ -1057,10 +1057,9 @@ def lineitem_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computed) — the pre-r13 spelling re-scanned and re-aggregated
     # lineitem for `tot` (a second full pass over the fact table at
     # 100 TB) and crossJoined the 1-row frame back on (guide §2.4).
-    # NULL-total edge: an all-NULL rev4 column gave the old SQL sum a
-    # NULL total where this gives Decimal(0) — every output expression
-    # involving t is NULL in both spellings there (cum4 and the class
-    # sums are NULL), so results are identical.
+    # NULL-total edge: an all-NULL rev4 column has a None total, shipped
+    # as 0 — every output expression involving t is NULL either way
+    # (cum4 and the class sums are NULL), so results match the SQL sum.
     run, tot_val = global_running_sum(
         rev,
         order_by=[F.desc("rev4"), F.asc("l_partkey")],
@@ -1071,7 +1070,7 @@ def lineitem_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decimal totals past ~1e19 don't survive the plain lit() py4j
     # path — ship as a string literal cast back (bit-exact)
     cls = run.withColumn(
-        "t", F.lit(str(tot_val)).cast("decimal(38,0)")
+        "t", F.lit(str(tot_val or 0)).cast("decimal(38,0)")
     ).withColumn(
         "pareto_class",
         F.when(F.col("cum4").cast("double") / F.col("t") <= 0.80, "A")

@@ -1,4 +1,4 @@
-"""Graph and chi-square builders hand back one lazy plan.
+"""Builders hand back one lazy plan, within a build-job budget.
 
 `triangle_count`, `kcore_peel` and the registry builders of
 `graph_triangle_suppliers`, `graph_kcore_suppliers`,
@@ -6,6 +6,9 @@
 answer inside the returned frame: no driver-side count and no result
 frame built from Python values. What building still runs is the table
 read and the pins' shuffle map stages; the budget below holds it there.
+The builders over the distributed prefix pass (`operators/scale.py`)
+run one bounded partials collect each by design; the budget holds them
+at that, so a second driver action in the shared pass fails all twelve.
 """
 
 from __future__ import annotations
@@ -27,7 +30,23 @@ _BUILD_JOBS = {
     "graph_kcore_suppliers": 12,
     "graph_bfs_reachability": 18,
     "events_chi2_type_weekday": 2,
+    # the prefix pass: the pin's range-shuffle map stage plus its
+    # partials collect, on top of each builder's own reads and pins
+    "docs_quality_deciles": 5,
+    "events_max_concurrent": 5,
+    "lineitem_abc_pareto": 6,
+    "orders_rfm_segmentation": 8,
+    "part_price_skyline": 7,
+    "stats_kruskal_wallis_returnflag": 6,
+    "stats_ks_two_sample": 6,
+    "stats_mann_whitney_status": 6,
+    "stats_spearman_qty_price": 11,
+    "supplier_revenue_gini": 6,
+    "text_rrf_fusion": 11,
+    "window_ntile_quartiles": 5,
 }
+# the answers of the lazy graph and chi-square builders; the oracles
+# (tools/verify_local.py) cover the others
 _ROWS = {
     "graph_triangle_suppliers": [[10, 67, 0.447761]],
     "graph_kcore_suppliers": [[1, 3, 3], [2, 0, 0], [3, 0, 0]],
@@ -47,7 +66,8 @@ def test_builder_build_job_budget(spark, name):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert pin_runs.rows(df) == _ROWS[name]
+    if name in _ROWS:
+        assert pin_runs.rows(df) == _ROWS[name]
     assert 0 < jobs <= _BUILD_JOBS[name], jobs
 
 

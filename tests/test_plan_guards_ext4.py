@@ -77,7 +77,7 @@ def test_abc_pareto_distributed_prefix_sum(spark):
     assert "ExistingRDD" in plan
     assert "MapInArrow" in plan
     assert "windowspecdefinition" not in plan
-    assert "hashpartitioning(__rsum_pid" not in plan
+    assert "hashpartitioning(__prefix_pid" not in plan
     # BOTH consumers (prefix pass and scalar total) read the pinned
     # frame: the one lineitem scan lives in the pin-materialization job,
     # so the final plan re-scans nothing (pre-r13 the total branch

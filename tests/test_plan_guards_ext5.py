@@ -328,10 +328,10 @@ def test_skyline_uses_distributed_prefix_min(spark):
     # ExistingRDD scan.)
     assert "MapInArrow" in plan
     assert "windowspecdefinition" not in plan
-    assert "hashpartitioning(__rmin_pid" not in plan
+    assert "hashpartitioning(__prefix_pid" not in plan
 
 
-def test_global_running_min_matches_window_spelling(spark):
+def test_global_running_min_matches_window_spelling(spark, range_partitions):
     from pyspark.sql import Window
 
     from social_and_media_data_ingestion_spark.operators.scale import (
@@ -342,12 +342,11 @@ def test_global_running_min_matches_window_spelling(spark):
         F.col("id"),
         ((F.col("id") * 37) % 101).alias("v"),
     )
-    got = {
-        r["id"]: r["m"]
-        for r in global_running_min(
-            df, ["id"], "v", out_col="m", num_partitions=8
-        ).collect()
-    }
+    with range_partitions(8):
+        got = {
+            r["id"]: r["m"]
+            for r in global_running_min(df, ["id"], "v", out_col="m").collect()
+        }
     w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
     want = {
         r["id"]: r["m"]
@@ -356,7 +355,7 @@ def test_global_running_min_matches_window_spelling(spark):
     assert got == want
 
 
-def test_global_running_min_exclusive_first_row_null(spark):
+def test_global_running_min_exclusive_first_row_null(spark, range_partitions):
     from pyspark.sql import Window
 
     from social_and_media_data_ingestion_spark.operators.scale import (
@@ -367,12 +366,13 @@ def test_global_running_min_exclusive_first_row_null(spark):
         F.col("id"),
         ((F.col("id") * 53) % 97).alias("v"),
     )
-    got = {
-        r["id"]: r["m"]
-        for r in global_running_min(
-            df, ["id"], "v", out_col="m", num_partitions=8, exclusive=True
-        ).collect()
-    }
+    with range_partitions(8):
+        got = {
+            r["id"]: r["m"]
+            for r in global_running_min(
+                df, ["id"], "v", out_col="m", exclusive=True
+            ).collect()
+        }
     w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
     want = {
         r["id"]: r["m"]
@@ -456,7 +456,7 @@ def test_gini_uses_distributed_rank(spark):
     # never an empty-partition global window
     assert "MapInArrow" in plan
     assert "windowspecdefinition" not in plan
-    assert "hashpartitioning(__rank_pid" not in plan  # r14: shared pid
+    assert "hashpartitioning(__prefix_pid" not in plan  # r14: shared pid
 
 
 def test_reconciliation_single_pass_reduction(spark):
@@ -496,14 +496,14 @@ def test_mann_whitney_uses_distributed_prefix_sum(spark):
     # empty-partition global window over the value frame
     assert "MapInArrow" in plan
     assert "windowspecdefinition" not in plan
-    assert "hashpartitioning(__rsum_pid" not in plan
+    assert "hashpartitioning(__prefix_pid" not in plan
 
 
 def test_kruskal_wallis_uses_distributed_prefix_sum(spark):
     plan = _plan(spark, "stats_kruskal_wallis_returnflag")
     assert "MapInArrow" in plan
     assert "windowspecdefinition" not in plan
-    assert "hashpartitioning(__rsum_pid" not in plan
+    assert "hashpartitioning(__prefix_pid" not in plan
 
 
 def test_ks_shared_prefix_sum_single_ranged_pass(spark):
@@ -514,7 +514,7 @@ def test_ks_shared_prefix_sum_single_ranged_pass(spark):
     # no empty-partition global window
     assert plan.count("MapInArrow") == 1
     assert "windowspecdefinition" not in plan
-    assert "hashpartitioning(__rsums_pid" not in plan
+    assert "hashpartitioning(__prefix_pid" not in plan
 
 
 def test_spearman_ranks_from_distributed_prefix_sum(spark):
@@ -524,7 +524,7 @@ def test_spearman_ranks_from_distributed_prefix_sum(spark):
     # empty-partition global window
     assert "MapInArrow" in plan
     assert "windowspecdefinition" not in plan
-    assert "hashpartitioning(__rsum_pid" not in plan
+    assert "hashpartitioning(__prefix_pid" not in plan
 
 
 def test_wilson_single_pass_no_join(spark):

@@ -239,7 +239,7 @@ def test_ntile_quartiles_no_single_partition_sort(spark):
     assert "ExistingRDD" in plan
     assert "MapInArrow" in plan
     assert "windowspecdefinition" not in plan
-    assert "hashpartitioning(__rank_pid" not in plan
+    assert "hashpartitioning(__prefix_pid" not in plan
 
 
 def test_rfm_segmentation_no_single_partition_sort(spark):
@@ -262,7 +262,7 @@ def test_max_concurrent_no_single_partition_sort(spark):
     assert "ExistingRDD" in plan
     assert "MapInArrow" in plan
     assert "windowspecdefinition" not in plan
-    assert "hashpartitioning(__rsum_pid" not in plan
+    assert "hashpartitioning(__prefix_pid" not in plan
 
 
 def test_ivf_assignment_map_side(spark):

@@ -80,7 +80,7 @@ def test_helpers_deterministic_across_invocations(spark):
     assert a == b
 
 
-def test_global_running_sums_matches_two_single_calls(spark):
+def test_global_running_sums_matches_two_single_calls(spark, range_partitions):
     from pyspark.sql import Window
 
     from social_and_media_data_ingestion_spark.operators.scale import (
@@ -93,12 +93,11 @@ def test_global_running_sums_matches_two_single_calls(spark):
         ((F.col("id") * 7) % 13).alias("a"),
         ((F.col("id") * 11) % 17).alias("b"),
     )
-    got = {
-        r["id"]: (r["a_cum"], r["b_cum"])
-        for r in global_running_sums(
-            df, ["id"], ["a", "b"], num_partitions=8
-        ).collect()
-    }
+    with range_partitions(8):
+        got = {
+            r["id"]: (r["a_cum"], r["b_cum"])
+            for r in global_running_sums(df, ["id"], ["a", "b"]).collect()
+        }
     w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
     want = {
         r["id"]: (r["ac"], r["bc"])
@@ -118,7 +117,7 @@ def test_global_running_sums_matches_two_single_calls(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_running_sum_exact_across_arrow_batches(spark):
+def test_running_sum_exact_across_arrow_batches(spark, range_partitions):
     # tiny Arrow batches force the per-batch carry path many times per
     # partition; bigint values near 2^40 would expose any float detour
     from social_and_media_data_ingestion_spark.operators.scale import (
@@ -133,18 +132,22 @@ def test_running_sum_exact_across_arrow_batches(spark):
             ((F.col("id") * 7919) % 104729).alias("key"),
             ((F.col("id") % 5) * F.lit(2**40) + F.col("id")).alias("v"),
             (F.col("id") * 1000 + 1).cast("decimal(30,0)").alias("d"),
+            # 30 significant digits: past Python's default Decimal context
+            (F.lit(str(10**29)).cast("decimal(38,0)") + F.col("id")).alias("e"),
         )
         w = Window.orderBy("key", "id").rowsBetween(
             Window.unboundedPreceding, Window.currentRow
         )
         want = {
-            r.id: (r.v_cum, r.d_cum)
+            r.id: (r.v_cum, r.d_cum, r.e_cum)
             for r in df.withColumn("v_cum", F.sum("v").over(w))
             .withColumn("d_cum", F.sum("d").over(w))
+            .withColumn("e_cum", F.sum("e").over(w))
             .collect()
         }
-        out = global_running_sums(df, ["key", "id"], ["v", "d"], num_partitions=8)
-        got = {r.id: (r.v_cum, r.d_cum) for r in out.collect()}
+        with range_partitions(8):
+            out = global_running_sums(df, ["key", "id"], ["v", "d", "e"])
+            got = {r.id: (r.v_cum, r.d_cum, r.e_cum) for r in out.collect()}
         assert got == want  # exact, not approx: ints and decimals
         # schema parity with the window spelling: sum(bigint) -> bigint,
         # sum(decimal(30,0)) -> decimal(38,0)
@@ -155,7 +158,7 @@ def test_running_sum_exact_across_arrow_batches(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def test_running_sum_null_semantics_match_window(spark):
+def test_running_sum_null_semantics_match_window(spark, range_partitions):
     # F.sum's frame semantics: NULL values are skipped, and the output is
     # NULL until the first non-NULL of the (partition-local) order — on a
     # single partition that is exactly the unpartitioned window's answer
@@ -168,28 +171,28 @@ def test_running_sum_null_semantics_match_window(spark):
         (r.id, r.rs)
         for r in df.withColumn("rs", F.sum("v").over(w)).orderBy("id").collect()
     ]
-    got = [
-        (r.id, r.rs)
-        for r in global_running_sum(
-            df, ["id"], "v", out_col="rs", num_partitions=1
-        )
-        .orderBy("id")
-        .collect()
-    ]
+    with range_partitions(1):
+        got = [
+            (r.id, r.rs)
+            for r in global_running_sum(df, ["id"], "v", out_col="rs")
+            .orderBy("id")
+            .collect()
+        ]
     assert got == want
 
 
-def test_row_number_carries_across_arrow_batches(spark):
+def test_row_number_carries_across_arrow_batches(spark, range_partitions):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "23")
     try:
         df = _df(spark, 997)
-        got = {
-            r.id: r.rn
-            for r in global_row_number(
-                df, ["key", "id"], out_col="rn", num_partitions=8
-            ).collect()
-        }
+        with range_partitions(8):
+            got = {
+                r.id: r.rn
+                for r in global_row_number(
+                    df, ["key", "id"], out_col="rn"
+                ).collect()
+            }
         w = Window.orderBy("key", "id")
         want = {
             r.id: r.rn
@@ -200,73 +203,36 @@ def test_row_number_carries_across_arrow_batches(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def test_running_sum_null_prefix_is_partition_local(spark):
-    """r13 ADVICE: the NULL-until-first-non-NULL window is PARTITION-
-    LOCAL — a row before its range partition's first non-NULL yields
-    NULL even when earlier partitions contributed non-NULL totals
-    (NULL + non-NULL offset was NULL in the pre-r13 window spelling
-    too). This pins the map-only pass bit-compatible with the OLD
-    spelling — and documents that both deliberately diverge from a
-    single-window global running sum on this edge (which would emit the
-    predecessor partitions' total instead of NULL)."""
-    # ids 0..99 non-NULL, ids 100..199 NULL: with 4 range partitions on
-    # id, partition >= 2 starts with a NULL prefix after non-NULL mass
-    rows = [(i, 1 if i < 100 else None) for i in range(200)]
+@pytest.mark.parametrize("parts", [1, 4, 8])
+def test_running_sum_is_one_window_at_any_partition_count(
+    spark, range_partitions, parts
+):
+    """The running sum equals `sum(v) OVER (ORDER BY id ROWS UNBOUNDED
+    PRECEDING)` whatever the range partition count: a row whose own
+    partition has seen only NULLs carries the earlier partitions'
+    non-NULL mass, and leading NULLs stay NULL."""
+    # ids 0..9 NULL, 10..99 one each, 100..169 NULL, 170..199 their id:
+    # with 4 or 8 range partitions on id, some partitions are all NULL
+    # or start with NULLs after non-NULL mass
+    rows = [
+        (i, None if i < 10 or 100 <= i < 170 else (1 if i < 100 else i))
+        for i in range(200)
+    ]
     df = spark.createDataFrame(rows, "id bigint, v bigint")
-    got = {
-        r.id: r.rs
-        for r in global_running_sum(
-            df, ["id"], "v", out_col="rs", num_partitions=4
-        ).collect()
-    }
-    # every row at or past the first NULL is NULL in SOME partition-local
-    # window; rows in the same partition as non-NULL mass keep summing
-    assert got[0] == 1 and got[99] == 100
-    # the tail partitions hold only NULLs -> NULL output (the
-    # single-window oracle would say 100 here; divergence documented)
-    assert got[199] is None
-    # bit-compat with the pre-r13 Window.partitionBy(pid) spelling
-    from pyspark.sql import Window as W
-
-    pid = "__pid_chk"
-    ranged = (
-        df.repartitionByRange(4, F.col("id"))
-        .withColumn(pid, F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    w = Window.orderBy("id").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
-    offs = {r[0]: r[1] for r in _prefix_offsets(ranged, pid)}
-    w = (
-        W.partitionBy(pid)
-        .orderBy("id")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    off_map = F.create_map(
-        *[F.lit(x) for p, o in sorted(offs.items()) for x in (p, o)]
-    )
-    want = {
-        r.id: r.rs
-        for r in ranged.withColumn(
-            "rs",
-            F.sum("v").over(w) + F.element_at(off_map, F.col(pid)),
-        ).collect()
-    }
+    want = {r.id: r.rs for r in df.withColumn("rs", F.sum("v").over(w)).collect()}
+    with range_partitions(parts):
+        got = {
+            r.id: r.rs
+            for r in global_running_sum(df, ["id"], "v", out_col="rs").collect()
+        }
     assert got == want
+    assert got[9] is None and got[100] == got[169] == 90
 
 
-def _prefix_offsets(ranged, pid):
-    rows = sorted(
-        ranged.groupBy(pid).agg(F.sum("v").alias("s")).collect(),
-        key=lambda r: r[pid],
-    )
-    acc = 0
-    out = []
-    for r in rows:
-        out.append((r[pid], acc))
-        acc += r["s"] or 0
-    return out
-
-
-def test_running_min_matches_window_with_nulls_multi_batch(spark):
+def test_running_min_matches_window_with_nulls_multi_batch(spark, range_partitions):
     """r14: global_running_min's map-only Arrow pass must reproduce the
     window spelling exactly — NULL skipping, inclusive AND exclusive
     frames, carries across forced-small Arrow batches."""
@@ -290,23 +256,19 @@ def test_running_min_matches_window_with_nulls_multi_batch(spark):
                 r.id: r.m
                 for r in df.withColumn("m", F.min("v").over(w)).collect()
             }
-            got = {
-                r.id: r.m
-                for r in global_running_min(
-                    df,
-                    ["id"],
-                    "v",
-                    out_col="m",
-                    num_partitions=8,
-                    exclusive=excl,
-                ).collect()
-            }
+            with range_partitions(8):
+                got = {
+                    r.id: r.m
+                    for r in global_running_min(
+                        df, ["id"], "v", out_col="m", exclusive=excl
+                    ).collect()
+                }
             assert got == want, f"exclusive={excl}"
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def test_running_min_nan_doubles_match_window(spark):
+def test_running_min_nan_doubles_match_window(spark, range_partitions):
     """NaN sorts above every non-NaN in Spark's min/least; the Arrow
     pass must reproduce that (plain Python `<` would freeze the running
     value once a NaN leads)."""
@@ -332,19 +294,18 @@ def test_running_min_nan_doubles_match_window(spark):
     want = {
         r.id: r.m for r in df.withColumn("m", F.min("v").over(w)).collect()
     }
-    got = {
-        r.id: r.m
-        for r in global_running_min(
-            df, ["id"], "v", out_col="m", num_partitions=8
-        ).collect()
-    }
+    with range_partitions(8):
+        got = {
+            r.id: r.m
+            for r in global_running_min(df, ["id"], "v", out_col="m").collect()
+        }
     assert set(got) == set(want)
     for k in want:
         g, x = got[k], want[k]
         assert g == x or (g != g and x != x), (k, g, x)
 
 
-def test_running_min_decimal_and_string_types(spark):
+def test_running_min_decimal_and_string_types(spark, range_partitions):
     """The Arrow pass keeps value_col's own type and ordering for
     non-numeric orderable types (Decimal exactness; str UTF-8 order)."""
     from decimal import Decimal
@@ -358,24 +319,24 @@ def test_running_min_decimal_and_string_types(spark):
         [(i, Decimal((i * 37) % 101) / Decimal(4)) for i in range(300)],
         "id bigint, v decimal(12,2)",
     )
-    got = global_running_min(dfc, ["id"], "v", out_col="m", num_partitions=8)
-    assert dict(got.dtypes)["m"] == "decimal(12,2)"
-    assert {r.id: r.m for r in got.collect()} == {
-        r.id: r.m for r in dfc.withColumn("m", F.min("v").over(w)).collect()
-    }
+    with range_partitions(8):
+        got = global_running_min(dfc, ["id"], "v", out_col="m")
+        assert dict(got.dtypes)["m"] == "decimal(12,2)"
+        assert {r.id: r.m for r in got.collect()} == {
+            r.id: r.m for r in dfc.withColumn("m", F.min("v").over(w)).collect()
+        }
     dfs = spark.createDataFrame(
         [(i, f"s{(i * 53) % 97:03d}") for i in range(300)],
         "id bigint, v string",
     )
-    assert {
-        r.id: r.m
-        for r in global_running_min(
-            dfs, ["id"], "v", out_col="m", num_partitions=8
-        ).collect()
-    } == {r.id: r.m for r in dfs.withColumn("m", F.min("v").over(w)).collect()}
+    with range_partitions(8):
+        assert {
+            r.id: r.m
+            for r in global_running_min(dfs, ["id"], "v", out_col="m").collect()
+        } == {r.id: r.m for r in dfs.withColumn("m", F.min("v").over(w)).collect()}
 
 
-def test_running_min_leading_all_nan_partition(spark):
+def test_running_min_leading_all_nan_partition(spark, range_partitions):
     """A leading range partition holding only NaN must not freeze the
     cross-partition prefix: NaN sorts above every number, so the next
     partition's minimum replaces it (a plain `m < acc` never does, and
@@ -392,12 +353,11 @@ def test_running_min_leading_all_nan_partition(spark):
     want = {
         r.id: r.m for r in df.withColumn("m", F.min("v").over(w)).collect()
     }
-    got = {
-        r.id: r.m
-        for r in global_running_min(
-            df, ["id"], "v", out_col="m", num_partitions=4
-        ).collect()
-    }
+    with range_partitions(4):
+        got = {
+            r.id: r.m
+            for r in global_running_min(df, ["id"], "v", out_col="m").collect()
+        }
     assert set(got) == set(want)
     for k in want:
         g, x = got[k], want[k]
@@ -405,7 +365,7 @@ def test_running_min_leading_all_nan_partition(spark):
     assert got[199] == 100.0
 
 
-def test_running_min_exclusive_bigint_vectorized_batches(spark):
+def test_running_min_exclusive_bigint_vectorized_batches(spark, range_partitions):
     """Null-free bigint with small Arrow batches: every batch after a
     partition's first takes the vectorized exclusive branch (shifted
     numpy prefix min carried across batches)."""
@@ -425,12 +385,13 @@ def test_running_min_exclusive_bigint_vectorized_batches(spark):
             r.id: r.m
             for r in df.withColumn("m", F.min("v").over(w)).collect()
         }
-        got = {
-            r.id: r.m
-            for r in global_running_min(
-                df, ["id"], "v", out_col="m", num_partitions=4, exclusive=True
-            ).collect()
-        }
+        with range_partitions(4):
+            got = {
+                r.id: r.m
+                for r in global_running_min(
+                    df, ["id"], "v", out_col="m", exclusive=True
+                ).collect()
+            }
         assert got == want
         assert got[0] is None
     finally:

@@ -1,10 +1,9 @@
 """Arm the staleness ledger: every registry query has green evidence at
-its current closure hash, at every commit. Evidence is a driver row
-(CORRECTNESS_r*.json) or a local record (LOCAL_EVIDENCE.json, written by
-tools/verify_local.py at sf0.001, sf0.01 and sf0.1), so a closure edit
-fails this suite until verify_local has re-run its queries green;
-`python tools/stale_rows.py` prints the command. Pure AST/git work, no
-Spark session.
+its current closure hash, at every commit. Evidence is a local record
+(LOCAL_EVIDENCE.json, written by tools/verify_local.py at sf0.001,
+sf0.01 and sf0.1), so a closure edit fails this suite until verify_local
+has re-run its queries green; `python tools/stale_rows.py` prints the
+command. Pure AST work, no Spark session.
 """
 
 from __future__ import annotations
@@ -38,8 +37,8 @@ def test_every_query_has_evidence_at_its_current_hash():
 
 @pytest.fixture
 def tree(tmp_path, monkeypatch):
-    """A copy of the package with no driver artifacts, as the ledger's
-    ROOT: its only evidence is the local record written here."""
+    """A copy of the package as the ledger's ROOT: its only evidence is
+    the local record written here."""
     shutil.copytree(
         ROOT / S.PKG, tmp_path / S.PKG, ignore=shutil.ignore_patterns("__pycache__")
     )
@@ -48,7 +47,7 @@ def tree(tmp_path, monkeypatch):
 
 
 def _hashes() -> dict[str, str]:
-    return S.closure_hashes(S.Snapshot(S.WORKTREE))
+    return S.closure_hashes(S.Snapshot())
 
 
 def _record(hashes: dict[str, str], names, sfs=S.LOCAL_SFS) -> None:

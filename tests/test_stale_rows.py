@@ -1,10 +1,8 @@
 """Unit tests for the content-hash staleness ledger (tools/stale_rows.py).
 
-The r6 verdict's three over-reporting causes each get a direct test:
-(a) rows-only no_oracle driver rows count as evidence, (b) attribute-
-level resolution keeps an unrelated edit in a shared engine module from
-staling its consumers, (c) comment-only edits never change a closure
-hash (ast.unparse normalizes them away).
+Attribute-level resolution keeps an unrelated edit in a shared engine
+module from staling its consumers, and comment-only edits never change
+a closure hash (ast.unparse normalizes them away).
 """
 
 import ast
@@ -14,15 +12,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 import stale_rows as S
-
-
-def test_green_accepts_no_oracle_rows_only():
-    assert S._green({"err": "no_oracle", "spark_rows": 1})
-    assert S._green({"hash_match": True})
-    assert S._green({"err": None, "rows_match": True})
-    assert not S._green({"err": "no_oracle", "spark_rows": None})
-    assert not S._green({"err": "boom", "spark_rows": 3})
-    assert not S._green({"err": None, "rows_match": False})
 
 
 def test_attr_refs_tracks_attribute_only_use():
@@ -65,7 +54,7 @@ def test_oracle_sql_in_decorator_is_part_of_the_hash():
 
 def test_worktree_closure_hashes_cover_registry():
     # smoke over the real repo: every @q registration resolves to a hash
-    hashes = S.closure_hashes(S.Snapshot(S.WORKTREE))
+    hashes = S.closure_hashes(S.Snapshot())
     assert len(hashes) >= 249
     assert "flagship_submission_extract" in hashes
     assert all(len(h) == 64 for h in hashes.values())

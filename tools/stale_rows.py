@@ -9,16 +9,13 @@ and cross-module engine objects resolved through the package's imports
 (an unresolvable or module-level import pulls in the whole engine file).
 ast.unparse drops comments, so comment-only edits never stale anything.
 
-Evidence:
-  - Driver rows (CORRECTNESS_r*.json), hashed against the git snapshot
-    at the commit that last touched the artifact (an untracked or
-    locally modified artifact stands for the working tree). Green =
-    hash_match, or rows-only success (err is None and rows not
-    mismatched), or err == "no_oracle" with a non-zero row count.
-  - Local rows (LOCAL_EVIDENCE.json), one per (query, sf) under the
-    closure hash it ran against, written by tools/verify_local.py. They
-    are evidence for a hash only when sf0.001, sf0.01 and sf0.1 are all
-    green at that hash; a red run overwrites the green row.
+Evidence: local rows (LOCAL_EVIDENCE.json), one per (query, sf) under
+the closure hash it ran against, written by tools/verify_local.py. They
+are evidence for a hash only when sf0.001, sf0.01 and sf0.1 are all
+green at that hash; a red run overwrites the green row. The driver
+rounds' CORRECTNESS_r*.json files are kept as history and read by
+nothing: every query has a local record at its current hash, and a
+driver row could only ever add evidence.
 
 FRESH: some evidence hash equals the current hash; STALE: evidence, but
 none matches; NEVER: no evidence. For each stale or never query the
@@ -36,82 +33,40 @@ import glob
 import hashlib
 import json
 import os
-import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "social_and_media_data_ingestion_spark"
-WORKTREE = "WORKTREE"
 LOCAL_EVIDENCE = "LOCAL_EVIDENCE.json"
 #: the SF directories (under TESTDATA) a local record must cover
 LOCAL_SFS = ("sf0.001", "sf0.01", "sf0.1")
 TESTDATA = "/root/testdata"
 
 
-def _git(*args: str) -> str:
-    return subprocess.run(
-        ["git", *args], cwd=ROOT, capture_output=True, text=True
-    ).stdout
-
-
-def _artifact_commit(path: str) -> str:
-    """Commit that last touched the artifact; WORKTREE if untracked OR
-    tracked-but-dirty (round-7 ADVICE: a locally-modified artifact holds
-    evidence produced by the working tree, not by the old snapshot)."""
-    if _git("status", "--porcelain", "--", path).strip():
-        return WORKTREE
-    out = _git("log", "-1", "--format=%H", "--", path).strip()
-    return out if out else WORKTREE
-
-
 class Snapshot:
-    """Reads repo files either from the working tree or from a commit."""
+    """Reads the working tree's package files, each parsed once."""
 
-    def __init__(self, ref: str):
-        self.ref = ref
-        self._src: dict[str, str | None] = {}
+    def __init__(self):
         self._mods: dict[str, "_ModuleIndex | None"] = {}
-
-    def source(self, rel: str) -> str | None:
-        if rel not in self._src:
-            if self.ref == WORKTREE:
-                p = os.path.join(ROOT, rel)
-                self._src[rel] = open(p).read() if os.path.exists(p) else None
-            else:
-                r = subprocess.run(
-                    ["git", "show", f"{self.ref}:{rel}"],
-                    cwd=ROOT,
-                    capture_output=True,
-                    text=True,
-                )
-                self._src[rel] = r.stdout if r.returncode == 0 else None
-        return self._src[rel]
 
     def module(self, rel: str) -> "_ModuleIndex | None":
         if rel not in self._mods:
-            src = self.source(rel)
+            p = os.path.join(ROOT, rel)
             try:
-                self._mods[rel] = _ModuleIndex(rel, src) if src else None
+                self._mods[rel] = (
+                    _ModuleIndex(rel, open(p).read()) if os.path.exists(p) else None
+                )
             except SyntaxError:
                 self._mods[rel] = None
         return self._mods[rel]
 
     def plans_files(self) -> list[str]:
-        if self.ref == WORKTREE:
-            pat = os.path.join(ROOT, PKG, "plans", "queries*.py")
-            return sorted(os.path.relpath(f, ROOT) for f in glob.glob(pat))
-        out = _git("ls-tree", "-r", "--name-only", self.ref, f"{PKG}/plans")
-        return sorted(
-            f
-            for f in out.splitlines()
-            if os.path.basename(f).startswith("queries")
-            and f.endswith(".py")
-        )
+        pat = os.path.join(ROOT, PKG, "plans", "queries*.py")
+        return sorted(os.path.relpath(f, ROOT) for f in glob.glob(pat))
 
 
 def _mod_file(mod: str) -> str | None:
-    """Dotted path inside PKG -> repo-relative file (working-tree layout;
-    module layout is stable across the rounds we ledger)."""
+    """Dotted path inside PKG -> repo-relative file."""
     cand = os.path.join(PKG, *mod.split(".")) + ".py"
     if os.path.exists(os.path.join(ROOT, cand)):
         return cand
@@ -259,21 +214,6 @@ def closure_hashes(snap: Snapshot) -> dict[str, str]:
     return out
 
 
-def _green(row: dict) -> bool:
-    if row.get("hash_match"):
-        return True
-    if row.get("err") is None and row.get("rows_match") is not False:
-        return True
-    # oracle-less rows-only path: driver records err="no_oracle" with a
-    # spark row count; that IS the strongest evidence such a query can
-    # ever have (round-6 ADVICE item 1) — but a ZERO-row result proves
-    # nothing (round-7 ADVICE: a silently-empty query must not count as
-    # verified)
-    if row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) > 0:
-        return True
-    return False
-
-
 def load_local() -> dict[str, dict[str, dict]]:
     """query -> sf -> {"green": bool, "hash": str}; {} if no artifact."""
     path = os.path.join(ROOT, LOCAL_EVIDENCE)
@@ -325,26 +265,10 @@ def ledger() -> dict:
     or never query, the SFs lacking a green local row at its current
     hash. Shared by the CLI below and by tests/test_stale_ledger.py,
     which requires stale == never == [] at every commit."""
-    current = closure_hashes(Snapshot(WORKTREE))
+    current = closure_hashes(Snapshot())
 
-    # evidence: query -> set of snapshot hashes with a green driver row
+    # evidence for a hash: every LOCAL_SFS row green at that one hash
     evidence: dict[str, set[str]] = {}
-    snap_hash_cache: dict[str, dict[str, str]] = {}
-    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
-        rel = os.path.relpath(path, ROOT)
-        ref = _artifact_commit(rel)
-        if ref not in snap_hash_cache:
-            snap_hash_cache[ref] = (
-                current if ref == WORKTREE else closure_hashes(Snapshot(ref))
-            )
-        hashes = snap_hash_cache[ref]
-        with open(path) as f:
-            for name, row in json.load(f).items():
-                if _green(row) and name in hashes:
-                    evidence.setdefault(name, set()).add(hashes[name])
-
-    # local rows: evidence for a hash only when every LOCAL_SFS row is
-    # green at that one hash
     local = load_local()
     for name, by_sf in local.items():
         h = by_sf.get(LOCAL_SFS[0], {}).get("hash")

@@ -52,7 +52,7 @@ def check(spark, con, sf_dir: str, name: str, d) -> bool:
         print(f"FAIL {name}: spark raised")
         traceback.print_exc()
         return False
-    if d.oracle is None:  # green only with rows, as in stale_rows._green
+    if d.oracle is None:  # no oracle: green only when it returns rows
         print(f"ROWS {name}: {len(sdf)} rows (no oracle) [{time.time()-t0:.1f}s]")
         return len(sdf) > 0
     try:
@@ -93,7 +93,7 @@ def main() -> int:
         print(f"neither a directory nor a registry query: {' '.join(unknown)}")
         return 2
 
-    before = S.closure_hashes(S.Snapshot(S.WORKTREE))
+    before = S.closure_hashes(S.Snapshot())
     spark = get_spark()
     results: list[tuple[str, str, bool]] = []
     for sf_dir in sf_dirs:
@@ -107,7 +107,7 @@ def main() -> int:
             if not only or name in only:
                 ok = check(spark, con, sf_dir, name, d)
                 results.append((name, os.path.basename(sf_dir), ok))
-    after = S.closure_hashes(S.Snapshot(S.WORKTREE))
+    after = S.closure_hashes(S.Snapshot())
     n_written = S.record_local(results, before, after)
 
     n_fail = sum(not ok for _, _, ok in results)
